@@ -271,13 +271,17 @@ def markov_transition_census(
     # its lost-edge alongside its transition edge in the same Generate
     # (the _small_star inline(CASE) pattern); the union'd multiset is
     # identical, so the census is too.
-    conv_sql = conversion_type.replace("'", "''")
-    edges = seq.selectExpr(
-        "inline(CASE WHEN __rnd = 1 AND __cur != '{c}' THEN"
-        " array(named_struct('__src', __src, '__dst', __dst),"
-        " named_struct('__src', __cur, '__dst', 'NULL'))"
-        " ELSE array(named_struct('__src', __src, '__dst', __dst))"
-        " END)".format(c=conv_sql)
+    # conversion_type is bound as a literal Column, never spliced into SQL
+    # text, so quotes and backslashes in it need no escaping
+    edge = F.struct(F.col("__src"), F.col("__dst"))
+    lost = F.struct(F.col("__cur").alias("__src"), F.lit("NULL").alias("__dst"))
+    edges = seq.select(
+        F.inline(
+            F.when(
+                (F.col("__rnd") == 1) & (F.col("__cur") != F.lit(conversion_type)),
+                F.array(edge, lost),
+            ).otherwise(F.array(edge))
+        )
     )
     return (
         edges

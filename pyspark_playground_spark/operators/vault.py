@@ -8,11 +8,15 @@ Mirrors ``pysparkvault/raw/RawVault.py``'s class API (SURVEY.md §2.11) —
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from pyspark_playground_spark.conventions import (
     ColumnDefinition,
@@ -22,6 +26,25 @@ from pyspark_playground_spark.conventions import (
 )
 from pyspark_playground_spark.operators import raw_vault as rv
 from pyspark_playground_spark.sources import catalog
+
+
+def _run_concurrently(session: SparkSession, writes: Sequence[Callable[[], None]]) -> None:
+    """Run independent table writes from driver threads; re-raise the first failure.
+
+    The pool holds one thread per write, capped at the driver's CPU count.
+    Each write runs under ``inheritable_thread_target(session)``, so its
+    jobs keep the caller's job group, tags, description and scheduler pool.
+    Every write runs to the end even if another fails; then the first
+    failure in list order propagates. Callers only pass writes of which none
+    reads a table another appends to, so no two share a table directory.
+    """
+    if not writes:
+        return
+    workers = min(len(writes), os.cpu_count() or 1)
+    with ThreadPoolExecutor(workers, thread_name_prefix="vault-write") as pool:
+        futures = [pool.submit(inheritable_thread_target(session)(w)) for w in writes]
+    for f in futures:
+        f.result()
 
 
 class RawVault:
@@ -206,32 +229,48 @@ class RawVault:
         load_ts: datetime | None = None,
     ) -> None:
         """Hub append + effectivity satellite + attribute satellites
-        (reference RawVault.py:194-260 fan-out)."""
+        (reference RawVault.py:194-260 fan-out).
+
+        The appends run concurrently (``_run_concurrently``): each plan reads
+        the staged frame and only the table it appends to, so none reads
+        another's output. ``DeclarativeVault.load_batch`` runs all hubs'
+        fan-outs as one wave and starts the link wave only after it, because
+        link FK resolution reads hubs and satellites. ``load_link`` keeps its
+        two appends sequential (its effectivity plan reads the link table)."""
         c = self.conv
         staged = rv._with_load_meta(staged, c, load_ts, self.config.record_source)
         hub_table = c.hub_name(name)
-        new_hubs = rv.hub_rows(
-            staged, business_key_columns,
-            existing=self._raw(hub_table), load_ts=load_ts,
-            record_source=self.config.record_source,
-            conv=c, config=self.config, hash_function=self.config.hash_function,
-        )
-        self._append(new_hubs, hub_table, [c.hkey()])
-
         eff_table = c.effectivity_sat_name(name)
-        new_eff = rv.effectivity_rows(
-            staged, existing=self._raw(eff_table),
-            conv=c, config=self.config, hash_function=self.config.hash_function,
-        )
-        self._append(new_eff, eff_table, [c.hkey(), c.load_date()])
 
-        for sat_name, attrs in (satellites or {}).items():
+        def load_hub_rows() -> None:
+            new_hubs = rv.hub_rows(
+                staged, business_key_columns,
+                existing=self._raw(hub_table), load_ts=load_ts,
+                record_source=self.config.record_source,
+                conv=c, config=self.config, hash_function=self.config.hash_function,
+            )
+            self._append(new_hubs, hub_table, [c.hkey()])
+
+        def load_effectivity() -> None:
+            new_eff = rv.effectivity_rows(
+                staged, existing=self._raw(eff_table),
+                conv=c, config=self.config, hash_function=self.config.hash_function,
+            )
+            self._append(new_eff, eff_table, [c.hkey(), c.load_date()])
+
+        def load_satellite(sat_name: str, attrs: Sequence[str]) -> None:
             sat_table = c.sat_name(sat_name)
             new_sat = rv.satellite_rows(
                 staged, attrs, existing=self._raw(sat_table),
                 conv=c, config=self.config, hash_function=self.config.hash_function,
             )
             self._append(new_sat, sat_table, [c.hkey(), c.load_date()])
+
+        _run_concurrently(
+            staged.sparkSession,
+            [load_hub_rows, load_effectivity]
+            + [partial(load_satellite, n, a) for n, a in (satellites or {}).items()],
+        )
 
     def load_link(
         self,
@@ -244,6 +283,11 @@ class RawVault:
         to_resolution: DataFrame | None = None,
         load_ts: datetime | None = None,
     ) -> None:
+        """2-ary FK link append, then its effectivity-satellite append.
+
+        The two writes stay sequential: the effectivity plan reads the link
+        table (``existing_link``), and the link append refreshes that
+        table's file index, so running them together would race."""
         c = self.conv
         staged_from = rv._with_load_meta(staged_from, c, load_ts, self.config.record_source)
         link_table = c.link_name(name)
@@ -278,32 +322,45 @@ class RawVault:
         load_ts: datetime | None = None,
         resolutions: dict[str, DataFrame] | None = None,
     ) -> None:
+        """N-ary link append plus its effectivity satellite, run concurrently:
+        the link plan reads only the link table and the effectivity plan only
+        the effectivity table, so neither reads the other's output
+        (``load_link`` cannot do this: its effectivity plan reads the link
+        table, so it runs after the link append). In
+        ``DeclarativeVault.load_batch`` this is part of the link wave, which
+        starts after every hub append is done because member resolution
+        reads hubs and satellites."""
         c = self.conv
         link_table = c.link_name(name)
-        new_links = rv.multilink_rows(
-            staged, members,
-            existing_link=self._raw(link_table), load_ts=load_ts,
-            record_source=self.config.record_source,
-            conv=c, config=self.config, hash_function=self.config.hash_function,
-            resolutions=resolutions,
-        )
-        self._append(new_links, link_table, [c.hkey()])
-
-        # association-table effectivity: DELETE ops close the link
         eff_table = c.effectivity_sat_name(name)
-        staged_k, _ = rv.resolve_member_hkeys(
-            staged.drop(c.hkey()),
-            members,
-            conv=c,
-            hash_function=self.config.hash_function,
-            resolutions=resolutions,
-            config=self.config,
-        )
-        new_eff = rv.effectivity_rows(
-            staged_k, existing=self._raw(eff_table),
-            conv=c, config=self.config, hash_function=self.config.hash_function,
-        )
-        self._append(new_eff, eff_table, [c.hkey(), c.load_date()])
+
+        def load_links() -> None:
+            new_links = rv.multilink_rows(
+                staged, members,
+                existing_link=self._raw(link_table), load_ts=load_ts,
+                record_source=self.config.record_source,
+                conv=c, config=self.config, hash_function=self.config.hash_function,
+                resolutions=resolutions,
+            )
+            self._append(new_links, link_table, [c.hkey()])
+
+        def load_effectivity() -> None:
+            # association-table effectivity: DELETE ops close the link
+            staged_k, _ = rv.resolve_member_hkeys(
+                staged.drop(c.hkey()),
+                members,
+                conv=c,
+                hash_function=self.config.hash_function,
+                resolutions=resolutions,
+                config=self.config,
+            )
+            new_eff = rv.effectivity_rows(
+                staged_k, existing=self._raw(eff_table),
+                conv=c, config=self.config, hash_function=self.config.hash_function,
+            )
+            self._append(new_eff, eff_table, [c.hkey(), c.load_date()])
+
+        _run_concurrently(staged.sparkSession, [load_links, load_effectivity])
 
     def create_point_in_time_table_for_single_satellite(
         self, pit_name: str, satellite_name: str

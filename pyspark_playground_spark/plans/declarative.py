@@ -27,6 +27,7 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 from datetime import datetime
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +41,7 @@ from pyspark_playground_spark.conventions import (
     VaultConfig,
 )
 from pyspark_playground_spark.operators import raw_vault as rv
-from pyspark_playground_spark.operators.vault import RawVault
+from pyspark_playground_spark.operators.vault import RawVault, _run_concurrently
 
 #: source type name → Spark type (reference: features/steps/raw_vault.py:215-240)
 TYPE_MAP: dict[str, T.DataType] = {
@@ -367,55 +368,83 @@ class DeclarativeVault:
         load_ts: datetime | None = None,
         record_source: str | None = None,
     ) -> None:
-        """Stage + load one CDC batch through every mapped hub/satellite/link."""
+        """Stage + load one CDC batch through every mapped hub/satellite/link.
+
+        The table appends run from driver threads in two waves with a
+        barrier between them. Two appends overlap only when neither one's
+        input plan reads the table the other appends to.
+
+        1. Hub wave: every hub's hub, effectivity-satellite and attribute-
+           satellite appends (``RawVault.load_hub``).
+        2. Link wave: every 2-ary link and N-ary multilink load. It starts
+           after the hub wave has finished, because FK resolution
+           (``_resolution``) reads the hub tables and satellites. Inside
+           ``RawVault.load_link`` the link and link-effectivity appends stay
+           sequential (the effectivity plan reads the link table).
+
+        If an append fails, the other appends of its wave still run to the
+        end, the next wave does not start, and the first failure is raised.
+        As with one append after another, a failed batch may leave some
+        tables appended; the anti-join dedup makes loading the same batch
+        again safe.
+        """
         staged = self.stage_batch(batch, record_source)
+        if not staged:
+            return
+        session = next(iter(staged.values())).sparkSession
 
         sats_by_hub: dict[str, list[SatelliteMapping]] = {}
         for sat in self.mapping.satellites:
             sats_by_hub.setdefault(sat.hub, []).append(sat)
 
-        for hub in self.mapping.hubs:
-            if hub.source_table not in staged:
-                continue
-            satellites = {
-                self._entity(s.name, s.source_table): self._sat_attributes(s)
-                for s in sats_by_hub.get(hub.name, [])
-            }
-            self.vault.load_hub(
+        _run_concurrently(session, [
+            partial(
+                self.vault.load_hub,
                 staged[hub.source_table],
                 self._entity(hub.name, hub.source_table),
                 list(hub.business_keys),
-                satellites=satellites,
+                satellites={
+                    self._entity(s.name, s.source_table): self._sat_attributes(s)
+                    for s in sats_by_hub.get(hub.name, [])
+                },
                 load_ts=load_ts,
             )
+            for hub in self.mapping.hubs
+            if hub.source_table in staged
+        ])
+        _run_concurrently(session, [
+            partial(self._load_link, staged, link, load_ts)
+            for link in self.mapping.links
+            if link.source_table in staged
+        ])
 
-        for link in self.mapping.links:
-            if link.source_table not in staged:
-                continue
-            entity = self._entity(link.name, link.source_table)
-            if link.source_table in self._hub_by_table and len(link.members) == 1:
-                m = link.members[0]
-                self.vault.load_link(
-                    staged[link.source_table],
-                    entity,
-                    from_name=link.source_table,
-                    to_name=m.target_table,
-                    fk_column=m.source_column,
-                    to_resolution=self._resolution(staged, m),
-                    load_ts=load_ts,
-                )
-            else:
-                members = [
-                    LinkedHubDefinition(m.target_table, m.source_column)
-                    for m in link.members
-                ]
-                resolutions = {
-                    m.target_table: self._resolution(staged, m) for m in link.members
-                }
-                self.vault.load_multilink(
-                    staged[link.source_table],
-                    entity,
-                    members,
-                    load_ts=load_ts,
-                    resolutions=resolutions,
-                )
+    def _load_link(
+        self, staged: dict[str, DataFrame], link: LinkMapping, load_ts: datetime | None
+    ) -> None:
+        entity = self._entity(link.name, link.source_table)
+        if link.source_table in self._hub_by_table and len(link.members) == 1:
+            m = link.members[0]
+            self.vault.load_link(
+                staged[link.source_table],
+                entity,
+                from_name=link.source_table,
+                to_name=m.target_table,
+                fk_column=m.source_column,
+                to_resolution=self._resolution(staged, m),
+                load_ts=load_ts,
+            )
+        else:
+            members = [
+                LinkedHubDefinition(m.target_table, m.source_column)
+                for m in link.members
+            ]
+            resolutions = {
+                m.target_table: self._resolution(staged, m) for m in link.members
+            }
+            self.vault.load_multilink(
+                staged[link.source_table],
+                entity,
+                members,
+                load_ts=load_ts,
+                resolutions=resolutions,
+            )

@@ -14,6 +14,8 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 # unchanged). Override with SPARK_GRAFT_TEST_CORES.
 TEST_CORES = os.environ.get("SPARK_GRAFT_TEST_CORES", "4")
 
+_SHM_BASETEMP = pytest.StashKey[str]()
+
 
 def pytest_configure(config):
     # tmpfs-backed tmp_path/tmpdir (r12 suite-wall fix): streaming tests
@@ -22,9 +24,16 @@ def pytest_configure(config):
     # no-ops. Data volumes are tiny (the suite's sources are hand-built
     # frames), so RAM usage is negligible.
     if config.option.basetemp is None and os.path.isdir("/dev/shm"):
-        config.option.basetemp = tempfile.mkdtemp(
+        config.option.basetemp = config.stash[_SHM_BASETEMP] = tempfile.mkdtemp(
             prefix="pytest-tmp-", dir="/dev/shm"
         )
+
+
+def pytest_unconfigure(config):
+    # the tmpfs basetemp made above is this run's own: remove it, or every
+    # run leaves one directory behind in /dev/shm
+    if _SHM_BASETEMP in config.stash:
+        shutil.rmtree(config.stash[_SHM_BASETEMP], ignore_errors=True)
 
 
 @pytest.fixture(scope="session")

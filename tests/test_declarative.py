@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import hashlib
 from datetime import datetime
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -217,3 +218,252 @@ def test_declarative_cross_batch_fk(spark, dv):
         .collect()
     )
     assert last and last[0][0] is True
+
+
+# ---------------------------------------------------------------------------
+# concurrent table appends inside load_batch
+# ---------------------------------------------------------------------------
+
+L0 = datetime(2026, 5, 1)
+L1 = datetime(2026, 5, 2)
+
+
+def _fresh_vault(session, prefix, mapping_yaml=MAPPING_YAML):
+    session.sql(f"DROP DATABASE IF EXISTS {prefix}_staging CASCADE")
+    session.sql(f"DROP DATABASE IF EXISTS {prefix}_raw CASCADE")
+    config = VaultConfig(
+        staging_prepared_database=f"{prefix}_staging",
+        raw_database=f"{prefix}_raw",
+        record_source="imdb",
+    )
+    v = DeclarativeVault(
+        session, SourceSchema.from_json(SCHEMA_JSON),
+        VaultMapping.from_yaml(mapping_yaml), config,
+    )
+    v.create_tables()
+    return v, sorted(t.name.upper() for t in session.catalog.listTables(config.raw_database))
+
+
+def _bulk(session):
+    return {
+        "movies": session.createDataFrame(
+            [("snapshot", T0, "m1", "Heat", 1995, "d1", 8.3),
+             ("snapshot", T0, "m2", "Ronin", 1998, "d2", 7.2)], MOVIE_SCHEMA),
+        "directors": session.createDataFrame(
+            [("snapshot", T0, "d1", "Michael Mann", "USA"),
+             ("snapshot", T0, "d2", "John Frankenheimer", "USA")], PERSON_SCHEMA),
+        "actors": session.createDataFrame(
+            [("snapshot", T0, "a1", "Al Pacino", "USA"),
+             ("snapshot", T0, "a2", "Robert De Niro", "USA")], PERSON_SCHEMA),
+        "castings": session.createDataFrame(
+            [("snapshot", T0, "m1", "a1"), ("snapshot", T0, "m1", "a2"),
+             ("snapshot", T0, "m2", "a2")], CASTING_SCHEMA),
+    }
+
+
+def _increment(session):
+    """m1 re-rated (update), m2 moves from director d2 to d1 (FK change),
+    actor a1 and the casting (m1, a1) deleted."""
+    return {
+        "movies": session.createDataFrame(
+            [("update", T1, "m1", "Heat", 1995, "d1", 8.5),
+             ("update", T1, "m2", "Ronin", 1998, "d1", 7.2)], MOVIE_SCHEMA),
+        "actors": session.createDataFrame(
+            [("delete", T1, "a1", "Al Pacino", "USA")], PERSON_SCHEMA),
+        "castings": session.createDataFrame(
+            [("delete", T1, "m1", "a1")], CASTING_SCHEMA),
+    }
+
+
+def _labels():
+    """hkey → readable label for every hub and link key of the scenario."""
+    movies = {"Heat": _md5("Heat,1995"), "Ronin": _md5("Ronin,1998")}
+    people = {k: _md5(k) for k in ("d1", "d2", "a1", "a2")}
+    out = {h: m for m, h in movies.items()} | {h: p for p, h in people.items()}
+    for m, mh in movies.items():
+        for p, ph in people.items():
+            out[_md5(f"{mh},{ph}")] = f"{m}-{p}"
+    return out
+
+
+def _readable(rows, labels):
+    """``rows`` minus the hash-diff column, hkeys as labels."""
+    return sorted(
+        tuple(labels.get(v, v) for k, v in r.asDict().items() if k != C.hdiff())
+        for r in rows
+    )
+
+
+#: every raw table after bulk (loaded L0, events T0) + increment (L1, T1):
+#: columns in table order minus the hash diff, hkeys as labels
+EXPECTED_AFTER_INCREMENT = {
+    "HUB__MOVIES": [
+        ("Heat", L0, "imdb", "Heat", 1995), ("Ronin", L0, "imdb", "Ronin", 1998)],
+    "HUB__DIRECTORS": [("d1", L0, "imdb", "d1"), ("d2", L0, "imdb", "d2")],
+    "HUB__ACTORS": [("a1", L0, "imdb", "a1"), ("a2", L0, "imdb", "a2")],
+    "SAT__MOVIES": [
+        ("Heat", T0, "m1", "d1", 8.3), ("Heat", T1, "m1", "d1", 8.5),
+        ("Ronin", T0, "m2", "d2", 7.2), ("Ronin", T1, "m2", "d1", 7.2)],
+    "SAT__DIRECTORS": [
+        ("d1", T0, "Michael Mann", "USA"), ("d2", T0, "John Frankenheimer", "USA")],
+    "SAT__ACTORS": [("a1", T0, "Al Pacino", "USA"), ("a2", T0, "Robert De Niro", "USA")],
+    "SAT__EFFECTIVITY_MOVIES": [("Heat", False, T0), ("Ronin", False, T0)],
+    "SAT__EFFECTIVITY_DIRECTORS": [("d1", False, T0), ("d2", False, T0)],
+    "SAT__EFFECTIVITY_ACTORS": [("a1", False, T0), ("a1", True, T1), ("a2", False, T0)],
+    "LNK__MOVIES_DIRECTORS": [
+        ("Heat-d1", "Heat", "d1", L0, "imdb"), ("Ronin-d1", "Ronin", "d1", L1, "imdb"),
+        ("Ronin-d2", "Ronin", "d2", L0, "imdb")],
+    "SAT__EFFECTIVITY_MOVIES_DIRECTORS": [
+        ("Heat-d1", False, T0), ("Ronin-d1", False, T1),
+        ("Ronin-d2", False, T0), ("Ronin-d2", True, T1)],
+    "LNK__CASTINGS": [
+        ("Heat-a1", "Heat", "a1", L0, "imdb"), ("Heat-a2", "Heat", "a2", L0, "imdb"),
+        ("Ronin-a2", "Ronin", "a2", L0, "imdb")],
+    "SAT__EFFECTIVITY_CASTINGS": [
+        ("Heat-a1", False, T0), ("Heat-a1", True, T1),
+        ("Heat-a2", False, T0), ("Ronin-a2", False, T0)],
+}
+
+
+def test_load_batch_concurrent_waves_equal_fixed_result_with_aqe(spark):
+    """The production session runs AQE on (the suite's session turns it
+    off). Five times over: bulk → increment (update, delete, FK change) →
+    exact replay on a fresh vault; every table must hold the same fixed
+    rows after the increment, and the replay must append nothing."""
+    import sys
+
+    aqe = spark.newSession()
+    aqe.conf.set("spark.sql.adaptive.enabled", "true")
+    labels = _labels()
+    first = None
+    switch = sys.getswitchinterval()
+    # switch driver threads far more often than the default 5 ms, so the
+    # concurrent plan builds and appends interleave at many more points
+    sys.setswitchinterval(1e-5)
+    try:
+        for _ in range(5):
+            v, tables = _fresh_vault(aqe, "decl_conc")
+            assert set(tables) == set(EXPECTED_AFTER_INCREMENT)
+            v.load_batch(_bulk(aqe), load_ts=L0)
+            v.load_batch(_increment(aqe), load_ts=L1)
+            full = {
+                t: sorted(aqe.table(f"decl_conc_raw.{t}").collect()) for t in tables
+            }
+            assert {t: _readable(rows, labels) for t, rows in full.items()} == (
+                EXPECTED_AFTER_INCREMENT
+            )
+            v.load_batch(_increment(aqe), load_ts=L1)
+            assert {t: aqe.table(f"decl_conc_raw.{t}").count() for t in tables} == {
+                t: len(rows) for t, rows in full.items()
+            }
+            # hash-diff columns included, every round writes identical rows
+            first = first or full
+            assert full == first
+    finally:
+        sys.setswitchinterval(switch)
+
+
+def _all_job_ids(sc) -> set[int]:
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    it = sc._jsc.sc().statusStore().jobsList(None).iterator()
+    out = set()
+    while it.hasNext():
+        out.add(it.next().jobId())
+    return out
+
+
+def test_load_batch_jobs_inherit_caller_job_group_and_tags(spark):
+    """Jobs of the concurrent appends run on worker threads; every one of
+    them must carry the caller's job group and tags, so ``cancelJobGroup``
+    and tag cancellation around a load keep working."""
+    v, _ = _fresh_vault(spark, "decl_grp")
+    sc = spark.sparkContext
+    before = _all_job_ids(sc)
+    sc.setJobGroup("decl-grp-load", "vault load under one group")
+    sc.addJobTag("decl-grp-tag")
+    spark.addTag("decl-grp-session-tag")
+    try:
+        v.load_batch(_bulk(spark), load_ts=L0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.clearJobTags()
+        spark.clearTags()
+    started = _all_job_ids(sc) - before
+    assert started
+    assert started <= set(sc.statusTracker().getJobIdsForGroup("decl-grp-load"))
+    store = sc._jsc.sc().statusStore()
+    for jid in started:
+        it = store.job(jid).jobTags().iterator()
+        tags = []
+        while it.hasNext():
+            tags.append(it.next())
+        assert "decl-grp-tag" in tags
+        assert any(t.endswith("-decl-grp-session-tag") for t in tags)
+    assert spark.table("decl_grp_raw.LNK__CASTINGS").count() == 3
+
+
+FAILING_MAPPING_YAML = """
+hubs:
+  - name: HUB__MOVIES
+    source_table: movies
+    business_keys: [NAME, YEAR]
+  - name: HUB__DIRECTORS
+    source_table: directors
+    business_keys: [ID]
+links:
+  - name: LNK__MOVIES_DIRECTORS
+    source_table: movies
+    to:
+      - source_column: DIRECTOR
+        source_foreign_key: {table: directors, column: ID}
+satellites:
+  - {name: SAT__MOVIES, hub: HUB__MOVIES, source_table: movies,
+     attributes: [RATING, NO_SUCH_COLUMN]}
+"""
+
+
+def test_load_batch_raises_failed_append_after_in_flight_writes(spark):
+    """A satellite mapped to a column the batch lacks fails its append:
+    load_batch raises that original error once the other appends of the
+    hub wave are done, leaves no worker thread or job running, and never
+    starts the link wave."""
+    import threading
+
+    from pyspark.errors import AnalysisException
+
+    v, _ = _fresh_vault(spark, "decl_fail", FAILING_MAPPING_YAML)
+    batch = {k: df for k, df in _bulk(spark).items() if k in ("movies", "directors")}
+    with pytest.raises(AnalysisException, match="NO_SUCH_COLUMN"):
+        v.load_batch(batch, load_ts=L0)
+    assert not [t for t in threading.enumerate() if t.name.startswith("vault-write")]
+    assert not spark.sparkContext.statusTracker().getActiveJobsIds()
+    assert spark.table("decl_fail_raw.HUB__MOVIES").count() == 2
+    assert spark.table("decl_fail_raw.HUB__DIRECTORS").count() == 2
+    assert spark.table("decl_fail_raw.SAT__MOVIES").count() == 0
+    assert spark.table("decl_fail_raw.LNK__MOVIES_DIRECTORS").count() == 0
+
+
+def test_run_concurrently_finishes_every_write_then_raises_first_failure(spark):
+    """A failing write does not cut the others short; the first failure in
+    list order is raised once every write has returned."""
+    import threading
+    import time
+
+    from pyspark_playground_spark.operators import vault
+
+    done = threading.Event()
+
+    def slow():
+        time.sleep(0.5)
+        done.set()
+
+    def fail(msg):
+        raise KeyError(msg)
+
+    with pytest.raises(KeyError, match="first"):
+        vault._run_concurrently(
+            spark, [partial(fail, "first"), slow, partial(fail, "second")]
+        )
+    assert done.is_set()
+    assert not [t for t in threading.enumerate() if t.name.startswith("vault-write")]

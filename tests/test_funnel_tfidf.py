@@ -242,6 +242,49 @@ def test_markov_attribution_hand_computed(spark):
     assert all(r["p_conv_q9"] == 0 for r in out0.values())
 
 
+def test_markov_conversion_type_with_quote_and_backslash(spark):
+    """A conversion type holding ``'`` and ``\\`` is compared as a value,
+    not spliced into SQL text: the census and the attribution equal those
+    of the same journeys with a plain conversion type."""
+    import datetime as dt
+
+    from pyspark_playground_spark.operators.funnel import (
+        markov_attribution,
+        markov_transition_census,
+    )
+
+    t0 = dt.datetime(2024, 3, 1, 12, 0)
+    h = lambda k: t0 + dt.timedelta(hours=k)  # noqa: E731
+    odd = "it's a \\'buy\\"
+    rows = [
+        (1, h(0), "view"), (1, h(1), "click"), (1, h(2), "purchase"),
+        (2, h(0), "view"),
+        (3, h(0), "click"), (3, h(1), "purchase"), (3, h(2), "view"),
+        (4, h(0), "purchase"),
+    ]
+    schema = "user_id bigint, ts timestamp, event_type string"
+    plain = spark.createDataFrame(rows, schema)
+    quoted = spark.createDataFrame(
+        [(u, t, odd if e == "purchase" else e) for u, t, e in rows], schema
+    )
+
+    def census(df, conversion_type):
+        return sorted(
+            tuple(r) for r in markov_transition_census(
+                df, conversion_type=conversion_type).collect()
+        )
+
+    def attribution(df, conversion_type):
+        return sorted(
+            tuple(r) for r in markov_attribution(
+                df, conversion_type=conversion_type).collect()
+        )
+
+    assert census(quoted, odd) == census(plain, "purchase")
+    assert ("view", "NULL", 2) in census(quoted, odd)
+    assert attribution(quoted, odd) == attribution(plain, "purchase")
+
+
 def test_kneser_ney_bigram_hand_computed(spark):
     """Python mirror pins every smoothed probability; the classic
     continuation effect holds: 'francisco' is as frequent as 'york'
