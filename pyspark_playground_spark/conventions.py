@@ -8,7 +8,7 @@ reference — configurable ``$__`` column prefix, ``HUB__``/``LNK__``/``SAT__``/
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime
 
 from pyspark.sql import types as T
@@ -73,9 +73,6 @@ class DataVaultConventions:
 
     def load_end_date(self) -> str:
         return self.column_prefix + "LOAD_END_DATE"
-
-    def cdc_load_date(self) -> str:
-        return self.column_prefix + "CDC_LOAD_DATE"
 
     def record_source(self) -> str:
         return self.column_prefix + "RECORD_SOURCE"
@@ -195,4 +192,3 @@ class VaultConfig:
     #: AQE picks the join strategy from runtime statistics instead of
     #: shipping the mapping to every executor (and the driver's memory).
     broadcast_resolutions: bool = True
-    extra: dict = field(default_factory=dict)

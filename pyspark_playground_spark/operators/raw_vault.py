@@ -6,10 +6,9 @@ Parity target: the reference's insert-only "v2" engine
 - Staging prep (RawVault.py:996-1043): rename CDC columns into the ``$__``
   dialect, stamp a record source, snapshot load-date override, compute HKEY.
 - ``load_hub`` (RawVault.py:194-260): CREATE|UPDATE|SNAPSHOT rows →
-  anti-join vs existing hub on HKEY → distinct → append.
+  dedup on HKEY → anti-join vs existing hub on HKEY → append.
 - ``load_satellite`` (RawVault.py:913-951): CREATE|UPDATE|SNAPSHOT rows,
-  LOAD_DATE := CDC event time, HDIFF over attributes, idempotent append
-  keyed on (HKEY, LOAD_DATE).
+  HDIFF over attributes, idempotent append keyed on (HKEY, LOAD_DATE).
 - ``load_effectivity_satellite`` (RawVault.py:953-994): CREATE|DELETE|SNAPSHOT
   rows, DELETED := (op == DELETE), keyed on (HKEY, LOAD_DATE).
 - ``load_link`` (RawVault.py:480-632): 2-ary FK link with delete detection —
@@ -20,6 +19,14 @@ Parity target: the reference's insert-only "v2" engine
 - ``load_multilink`` (RawVault.py:660-708): N-ary link from an association
   table.
 - ``load_references`` / ``load_code_references`` (RawVault.py:710-911).
+
+Load metadata: every kernel takes the staged frame exactly as
+``prepare_staging`` returns it, whose ``$__LOAD_DATE`` is the CDC event time.
+
+- Hub and link ``$__LOAD_DATE`` is the batch load time (``load_ts``, else
+  ``current_timestamp()``), and their ``$__RECORD_SOURCE`` is the
+  ``record_source`` argument (``"unknown"`` when it is None).
+- Satellite and effectivity-satellite ``$__LOAD_DATE`` is the event time.
 
 Design differences from the reference (deliberate, Spark-first):
 
@@ -115,77 +122,10 @@ def prepare_staging(
     return out
 
 
-def _with_load_meta(
-    staged: DataFrame,
-    conv: DataVaultConventions,
-    load_ts: datetime | None,
-    record_source: str | None,
-) -> DataFrame:
-    """Stamp CDC_LOAD_DATE := event time, LOAD_DATE := batch load time.
-
-    Reference: load_hub step (RawVault.py:235-240). Idempotent: if the batch
-    is already stamped (CDC_LOAD_DATE present), event time is preserved.
-    """
-    if conv.cdc_load_date() in staged.columns:
-        if record_source is not None and conv.record_source() not in staged.columns:
-            return staged.withColumn(conv.record_source(), F.lit(record_source))
-        return staged
-    out = staged.withColumn(conv.cdc_load_date(), F.col(conv.load_date()))
-    ts: Column = F.lit(load_ts).cast("timestamp") if load_ts else F.current_timestamp()
-    out = out.withColumn(conv.load_date(), ts)
-    if record_source is not None:
-        out = out.withColumn(conv.record_source(), F.lit(record_source))
-    elif conv.record_source() not in out.columns:
-        out = out.withColumn(conv.record_source(), F.lit("unknown"))
-    return out
-
-
 def _filter_ops(df: DataFrame, conv: DataVaultConventions, ops: Sequence[int]) -> DataFrame:
     if conv.operation() in df.columns:
         return df.filter(F.col(conv.operation()).isin(list(ops)))
     return df
-
-
-def _bkey_tuple_hash_injective(df: DataFrame, keys: Sequence[str]) -> bool:
-    """True when ``hash_key(keys)`` is provably injective over the staged
-    frame's business-key tuples (modulo the engine's standing md5
-    hash-identity bet), i.e. when one row per hkey IS one row per key
-    tuple and the hub dedup may legally run ``distinct()`` over
-    ``(hkey, *keys)`` instead of ``dropDuplicates([hkey])``.
-
-    The hash renders each key with ``concat_ws(',', cast(k as string))``,
-    which SKIPS nulls — so ``('a', NULL)`` and ``(NULL, 'a')`` collapse
-    to the same hkey while staying distinct tuples (SURVEY §7 hard-item
-    5's null-collapse class; VERDICT r11 "What's wrong" #2), and string
-    keys can inject the separator (``('a,b', 'c')`` vs ``('a', 'b,c')``)
-    or an empty string. Provably safe cases:
-
-    - one key of a non-string scalar type: a NULL renders as ``''`` and
-      every non-null value as a non-empty canonical string, so distinct
-      tuples always render distinctly (nullability does not matter);
-    - N >= 2 keys, all non-nullable AND all non-string scalar types:
-      every field renders non-empty and comma-free, so the separated
-      concatenation is injective.
-
-    Everything else (string keys, nullable multi-key tuples) returns
-    False and the caller must keep the reference's one-row-per-hkey
-    ``dropDuplicates`` semantics.
-    """
-    from pyspark.sql import types as T
-
-    safe_scalar = (
-        T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-        T.FloatType, T.DoubleType, T.DecimalType, T.BooleanType,
-        T.DateType, T.TimestampType, T.TimestampNTZType,
-    )
-    fields = {f.name: f for f in df.schema.fields}
-    if any(k not in fields for k in keys):
-        return False
-    if any(not isinstance(fields[k].dataType, safe_scalar) for k in keys):
-        return False
-    if len(keys) == 1:
-        return True
-    return all(not fields[k].nullable for k in keys)
 
 
 def _maybe_repartition(
@@ -213,6 +153,24 @@ def _anti(
     return df.join(existing, cond, "left_anti")
 
 
+def _batch_meta(
+    conv: DataVaultConventions, load_ts: datetime | None, record_source: str | None
+) -> list[Column]:
+    """Hub/link ``$__LOAD_DATE`` and ``$__RECORD_SOURCE`` as batch constants.
+
+    Callers select them after the key-only dedup and the anti-join. Inside
+    ``dropDuplicates`` they would become ``first(<literal>)`` aggregates;
+    the string buffer of the record source forces ``SortAggregate`` (a full
+    sort on both sides of the exchange) instead of ``HashAggregate``, and
+    the exchange would ship both constants with every row.
+    """
+    ts = F.lit(load_ts).cast("timestamp") if load_ts else F.current_timestamp()
+    return [
+        ts.alias(conv.load_date()),
+        F.lit(record_source or "unknown").alias(conv.record_source()),
+    ]
+
+
 # ---------------------------------------------------------------------------
 # hubs
 # ---------------------------------------------------------------------------
@@ -234,57 +192,14 @@ def hub_rows(
     (reference shape RawVault.py:64-83; loader RawVault.py:194-260).
     """
     df = _filter_ops(staged, conv, Operation.HUB_SAT_OPS)
-    hkey_computed_here = conv.hkey() not in df.columns
-    if hkey_computed_here:
+    if conv.hkey() not in df.columns:
         df = df.withColumn(conv.hkey(), hash_key(list(business_key_columns), hash_function))
-    # When the batch is not yet CDC-stamped, LOAD_DATE/RECORD_SOURCE are
-    # call-level constants — keep them OUT of the dedup aggregate.
-    # dropDuplicates compiles to first() over every non-key column, and a
-    # string aggregation buffer (the record source) disqualifies
-    # HashAggregate: the plan degrades to SortAggregate with a full sort
-    # on both sides of the exchange, and the exchange itself carries the
-    # constant per row. Constants are re-attached after the key-only
-    # dedup + anti-join — same rows, same columns, same order.
-    meta_is_const = conv.cdc_load_date() not in df.columns and (
-        record_source is not None or conv.record_source() not in df.columns
-    )
-    df = _with_load_meta(df, conv, load_ts, record_source)
-    if meta_is_const:
-        ts_c: Column = (
-            F.lit(load_ts).cast("timestamp") if load_ts else F.current_timestamp()
-        )
-        rs_c = F.lit(record_source if record_source is not None else "unknown")
-        keyed = df.select(conv.hkey(), *business_key_columns)
-        # distinct() when the hkey was computed HERE from exactly these
-        # business keys (r11) AND the key tuple → hkey mapping is provably
-        # injective for this staged schema (r12, VERDICT r11 item 4: with
-        # nullable or string keys, concat_ws collapses distinct tuples —
-        # ('a', NULL) vs (NULL, 'a') — onto one hkey, and distinct() would
-        # emit TWO hub rows for one hkey where the reference's
-        # dropDuplicates keeps one). When injective, one row per hkey IS
-        # one row per key tuple (the standing hash-identity bet), and the
-        # all-grouping-keys aggregate drops the first(<bkey>) buffers
-        # that degrade string-carrying hubs to SortAggregate. A
-        # pre-hashed input keeps dropDuplicates — the dependency is not
-        # locally provable there.
-        deduped = (
-            keyed.distinct()
-            if hkey_computed_here
-            and _bkey_tuple_hash_injective(df, business_key_columns)
-            else keyed.dropDuplicates([conv.hkey()])
-        )
-        df = deduped.select(
-            conv.hkey(),
-            ts_c.alias(conv.load_date()),
-            rs_c.alias(conv.record_source()),
-            *business_key_columns,
-        )
-    else:
-        df = df.select(
-            conv.hkey(), conv.load_date(), conv.record_source(), *business_key_columns
-        ).dropDuplicates([conv.hkey()])
+    df = df.select(conv.hkey(), *business_key_columns).dropDuplicates([conv.hkey()])
     df = _maybe_repartition(df, [conv.hkey()], config)
-    return _anti(df, existing, [conv.hkey()])
+    df = _anti(df, existing, [conv.hkey()])
+    return df.select(
+        conv.hkey(), *_batch_meta(conv, load_ts, record_source), *business_key_columns
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -308,9 +223,6 @@ def satellite_rows(
     SAT__MOVIES = 14 in features/raw-vault.feature).
     """
     df = _filter_ops(staged, conv, Operation.HUB_SAT_OPS)
-    # satellites keep event time as their LOAD_DATE (RawVault.py:928-933)
-    if conv.cdc_load_date() in df.columns:
-        df = df.withColumn(conv.load_date(), F.col(conv.cdc_load_date()))
     df = df.withColumn(conv.hdiff(), hash_diff(list(attribute_columns), hash_function))
     df = df.select(
         conv.hkey(), conv.hdiff(), conv.load_date(), *attribute_columns
@@ -334,8 +246,6 @@ def effectivity_rows(
     ``$__DELETED := (op == DELETE)``, keyed on (HKEY, LOAD_DATE).
     """
     df = _filter_ops(staged, conv, Operation.EFFECTIVITY_OPS)
-    if conv.cdc_load_date() in df.columns:
-        df = df.withColumn(conv.load_date(), F.col(conv.cdc_load_date()))
     df = df.withColumn(
         conv.deleted(), (F.col(conv.operation()) == Operation.DELETE)
         if conv.operation() in df.columns
@@ -455,11 +365,8 @@ def link_rows(
             "left",
         ).drop("__map_key")
 
-    event_time = (
-        conv.cdc_load_date() if conv.cdc_load_date() in resolved.columns else conv.load_date()
-    )
     resolved = resolved.select(
-        from_hkey, to_hkey, F.col(event_time).alias("__event_time")
+        from_hkey, to_hkey, F.col(conv.load_date()).alias("__event_time")
     ).cache()
     if cache_registry is not None:
         cache_registry.append(resolved)
@@ -469,16 +376,10 @@ def link_rows(
         resolved.filter(F.col(to_hkey).isNotNull())
         .withColumn(conv.hkey(), hash_key([from_hkey, to_hkey], hash_function))
     )
-    # constants attached after the key-only dedup + anti-join (see
-    # multilink_rows: string-literal first() buffers force SortAggregate).
-    # distinct() instead of dropDuplicates(hkey) (r11): the hkey was JUST
-    # computed as hash(from, to), so one row per distinct hkey IS one row
-    # per distinct (hkey, from, to) tuple (the engine's standing
-    # hash-identity bet) — and an all-grouping-keys aggregate has no
-    # first() buffers, restoring HashAggregate for md5's STRING member
-    # keys (first(string) has an immutable buffer and degrades the plan
-    # to SortAggregate with a full sort on both sides of the exchange).
-    ts: Column = F.lit(load_ts).cast("timestamp") if load_ts else F.current_timestamp()
+    # distinct() rather than dropDuplicates([hkey]): the hkey was just
+    # computed as hash(from, to), so one row per hkey is one row per
+    # (hkey, from, to) tuple, and an all-grouping-keys aggregate has no
+    # first() buffers, which keeps md5's string member keys on HashAggregate
     new_links = (
         pairs.select(conv.hkey(), F.col(from_hkey), F.col(to_hkey))
         .distinct()
@@ -489,8 +390,7 @@ def link_rows(
         conv.hkey(),
         F.col(from_hkey),
         F.col(to_hkey),
-        ts.alias(conv.load_date()),
-        F.lit(record_source or "unknown").alias(conv.record_source()),
+        *_batch_meta(conv, load_ts, record_source),
     )
 
     # --- effectivity: current state per staged row -------------------------
@@ -528,12 +428,9 @@ def link_rows(
     # (golden spec: features/raw-vault.feature "Simple delete in the CDC
     # batch" — link effectivity gains deleted=True at the source row's
     # DELETE event)
-    event_time_all = (
-        conv.cdc_load_date() if conv.cdc_load_date() in renamed.columns else conv.load_date()
-    )
     deletes = (
         _filter_ops(renamed, conv, [Operation.DELETE])
-        .select(from_hkey, F.col(event_time_all).alias("__event_time"))
+        .select(from_hkey, F.col(conv.load_date()).alias("__event_time"))
         .alias("dl")
     )
     delete_vanished = (
@@ -645,27 +542,14 @@ def multilink_rows(
         df, members, conv=conv, hash_function=hash_function,
         resolutions=resolutions, config=config,
     )
-    # LOAD_DATE/RECORD_SOURCE are call-level constants here: attach them
-    # AFTER the key-only dedup + anti-join. Inside dropDuplicates they
-    # become first(<string literal>) aggregates whose immutable string
-    # buffers force SortAggregate (two full sorts around the exchange)
-    # instead of HashAggregate, and the exchange ships the constants per
-    # row. distinct() instead of dropDuplicates(hkey) (r11): the hkey was
-    # JUST computed as hash(member hkeys in order), so one row per
-    # distinct hkey IS one row per distinct tuple (the standing
-    # hash-identity bet) — an all-grouping-keys aggregate has no first()
-    # buffers at all, so the md5 variant hash-aggregates too (first's
-    # immutable string buffer was degrading it to SortAggregate).
-    ts: Column = F.lit(load_ts).cast("timestamp") if load_ts else F.current_timestamp()
+    # distinct() rather than dropDuplicates([hkey]): the hkey was just
+    # computed as hash(member hkeys in order), so one row per hkey is one
+    # row per tuple, and an all-grouping-keys aggregate has no first()
+    # buffers, which keeps the md5 variant on HashAggregate
     out = df.select(conv.hkey(), *hkey_cols).distinct()
     out = _maybe_repartition(out, [conv.hkey()], config)
     out = _anti(out, existing_link, [conv.hkey()])
-    return out.select(
-        conv.hkey(),
-        *hkey_cols,
-        ts.alias(conv.load_date()),
-        F.lit(record_source or "unknown").alias(conv.record_source()),
-    )
+    return out.select(conv.hkey(), *hkey_cols, *_batch_meta(conv, load_ts, record_source))
 
 
 # ---------------------------------------------------------------------------

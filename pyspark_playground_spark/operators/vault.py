@@ -238,7 +238,6 @@ class RawVault:
         link FK resolution reads hubs and satellites. ``load_link`` keeps its
         two appends sequential (its effectivity plan reads the link table)."""
         c = self.conv
-        staged = rv._with_load_meta(staged, c, load_ts, self.config.record_source)
         hub_table = c.hub_name(name)
         eff_table = c.effectivity_sat_name(name)
 
@@ -289,7 +288,6 @@ class RawVault:
         table (``existing_link``), and the link append refreshes that
         table's file index, so running them together would race."""
         c = self.conv
-        staged_from = rv._with_load_meta(staged_from, c, load_ts, self.config.record_source)
         link_table = c.link_name(name)
         eff_table = c.effectivity_sat_name(name)
         caches: list[DataFrame] = []
@@ -614,7 +612,9 @@ class RawVault:
         """Many staged tables into one REF table, one append write. The
         existing side is read once and reused by every anti-join (the
         reference ships this shape for code refs, RawVault.py:805-858; the
-        plain-REF loop is symmetric)."""
+        plain-REF loop is symmetric). An empty list writes nothing."""
+        if not staging_table_names:
+            return
         c = self.conv
         table = c.ref_name(name)
         existing = self._raw(table)
@@ -651,7 +651,10 @@ class RawVault:
         (reference RawVault.py:805-858): group := lower(table name), the
         existing side read once, one append write for the whole batch —
         at production breadth (the reference driver loads ~160 typelists
-        this way) that is 1 write job instead of N."""
+        this way) that is 1 write job instead of N. An empty list writes
+        nothing."""
+        if not staging_table_names:
+            return
         c = self.conv
         table = c.ref_name(name)
         existing = self._raw(table)

@@ -281,11 +281,10 @@ class DeclarativeVault:
         return cols
 
     # ---- load -------------------------------------------------------------
-    def stage_batch(
-        self, batch: dict[str, DataFrame], record_source: str | None = None
-    ) -> dict[str, DataFrame]:
-        """Normalize a CDC batch: rename envelope columns, stamp record
-        source, compute HKEYs (hub business keys, else the source PK)."""
+    def stage_batch(self, batch: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        """Normalize a CDC batch: rename envelope columns, stamp
+        ``config.record_source``, compute HKEYs (hub business keys, else the
+        source PK)."""
         staged = {}
         for name, df in batch.items():
             hub = self._hub_by_table.get(name)
@@ -300,7 +299,7 @@ class DeclarativeVault:
                     if self.operation_column and self.operation_column in df.columns
                     else None
                 ),
-                record_source=record_source or self.config.record_source,
+                record_source=self.config.record_source,
                 hkey_columns=hkeys,
                 conv=self.conv,
                 hash_function=self.config.hash_function,
@@ -366,7 +365,6 @@ class DeclarativeVault:
         batch: dict[str, DataFrame],
         *,
         load_ts: datetime | None = None,
-        record_source: str | None = None,
     ) -> None:
         """Stage + load one CDC batch through every mapped hub/satellite/link.
 
@@ -388,7 +386,7 @@ class DeclarativeVault:
         tables appended; the anti-join dedup makes loading the same batch
         again safe.
         """
-        staged = self.stage_batch(batch, record_source)
+        staged = self.stage_batch(batch)
         if not staged:
             return
         session = next(iter(staged.values())).sparkSession

@@ -1,11 +1,13 @@
 #!/usr/bin/env bash
-# One-command verification: unit/property suite, DuckDB-oracle gate for all
-# registered queries, then the sf0.1 benchmark. Mirrors what the round
-# driver runs; useful before any commit that touches operators.
+# One-command verification: unit/property suite, benchmark-harness tests,
+# DuckDB-oracle gate for all registered queries, then the sf0.1 benchmark.
+# Useful before any commit that touches operators.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 echo "== pytest =="
 python -m pytest tests/ -q
+echo "== benchmark harness self-tests =="
+python3 -m pytest vaultbench -q
 echo "== oracle result-type lint (sf0.001, DuckDB-only) =="
 python scripts/check_oracle.py --lint-types /root/testdata/sf0.001
 echo "== oracle gate (sf0.01) =="

@@ -5,14 +5,22 @@ Scenario mirrors the reference's golden CDC test structure
 CREATE/UPDATE/DELETE/SNAPSHOT ops across batches.
 """
 
+import re
 from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from pyspark_playground_spark.conventions import DataVaultConventions, Operation
+from pyspark_playground_spark.conventions import (
+    ColumnDefinition,
+    DataVaultConventions,
+    Operation,
+    VaultConfig,
+)
 from pyspark_playground_spark.functions.hashing import hash_key
 from pyspark_playground_spark.operators import raw_vault as rv
+from pyspark_playground_spark.operators.vault import RawVault
 
 C = DataVaultConventions()
 
@@ -95,29 +103,70 @@ def test_hub_rows_null_bkey_collision_keeps_one_row_per_hkey(spark):
     )
 
 
-def test_hub_rows_injective_bkey_keeps_hash_aggregate_plan(spark):
-    """The r11 SortAggregate→HashAggregate hub win must survive the r12
-    null-bkey gate for the provably-injective case (single non-string
-    key): the dedup stays an all-grouping-keys distinct()."""
-    df = spark.createDataFrame(
-        [(Operation.CREATE, T0, 1), (Operation.CREATE, T0, 1), (Operation.CREATE, T0, 2)],
-        "OPERATION int, LOAD_DATE timestamp, ck bigint",
-    )
-    # no hkey_columns (hub_rows computes the hkey from exactly the
-    # business keys) and an explicit record_source (so the constants
-    # stay off the dedup aggregate): the construction where the
-    # distinct() fast path applies
+def _hub_frame_from_kernel(df, monkeypatch):
+    # no hkey_columns: hub_rows computes the hkey from the business keys
     staged = rv.prepare_staging(
         df,
         load_date_column="LOAD_DATE",
         operation_column="OPERATION",
         record_source="test",
     )
-    hub = rv.hub_rows(staged, ["ck"], load_ts=T1, record_source="test")
-    assert hub.count() == 2
+    return rv.hub_rows(staged, ["ck"], load_ts=T1, record_source="test")
+
+
+def _hub_frame_from_load_hub(df, monkeypatch):
+    # the write path: a frame staged with hkey_columns (as
+    # DeclarativeVault.stage_batch does) through RawVault.load_hub, with
+    # the hub frame captured where load_hub hands it to _append
+    spark = df.sparkSession
+    spark.sql("DROP DATABASE IF EXISTS rvk_stg CASCADE")
+    spark.sql("DROP DATABASE IF EXISTS rvk_raw CASCADE")
+    vault = RawVault(
+        spark,
+        VaultConfig(
+            staging_prepared_database="rvk_stg", raw_database="rvk_raw",
+            record_source="test",
+        ),
+    )
+    vault.initialize_database()
+    vault.create_hub("customer", [ColumnDefinition("ck", T.LongType(), False)])
+    appended = {}
+    monkeypatch.setattr(
+        RawVault, "_append",
+        lambda self, frame, table, bucket_columns: appended.__setitem__(table, frame),
+    )
+    staged = rv.prepare_staging(
+        df,
+        load_date_column="LOAD_DATE",
+        operation_column="OPERATION",
+        record_source="test",
+        hkey_columns=["ck"],
+    )
+    vault.load_hub(staged, "customer", ["ck"], load_ts=T1)
+    return appended[C.hub_name("customer")]
+
+
+@pytest.mark.parametrize(
+    "hub_frame",
+    [_hub_frame_from_kernel, _hub_frame_from_load_hub],
+    ids=["kernel", "load_hub"],
+)
+def test_hub_rows_injective_bkey_keeps_hash_aggregate_plan(spark, monkeypatch, hub_frame):
+    """The hub dedup is one key-only aggregate on both the kernel and the
+    load_hub write path: HashAggregate over the business key alone, with
+    LOAD_DATE and RECORD_SOURCE attached as constants after it."""
+    df = spark.createDataFrame(
+        [(Operation.CREATE, T0, 1), (Operation.CREATE, T0, 1), (Operation.CREATE, T0, 2)],
+        "OPERATION int, LOAD_DATE timestamp, ck bigint",
+    )
+    hub = hub_frame(df, monkeypatch)
+    rows = hub.collect()
+    assert sorted(r["ck"] for r in rows) == [1, 2]
+    assert {(r[C.load_date()], r[C.record_source()]) for r in rows} == {(T1, "test")}
     plan = hub._jdf.queryExecution().executedPlan().toString()
     assert "SortAggregate" not in plan, plan
-    assert "first(" not in plan, plan  # all-grouping-keys distinct
+    # first() only over the business key, never over the batch constants
+    assert all(a.startswith("ck#") for a in re.findall(r"first\(([^,)]*)", plan)), plan
 
 
 def test_hub_hkey_is_md5_of_business_key(spark):
@@ -132,14 +181,13 @@ def test_hub_hkey_is_md5_of_business_key(spark):
 
 
 def test_satellite_rows_versions_and_idempotency(spark):
-    b1 = _staged(
+    staged = _staged(
         spark,
         [
             (Operation.CREATE, T0, "m1", "Movie 1", 5),
             (Operation.UPDATE, T1, "m1", "Movie 1x", 6),
         ],
     )
-    staged = rv._with_load_meta(b1, C, T1, "test")
     sat1 = rv.satellite_rows(staged, ["NAME", "RATING"])
     assert sat1.count() == 2  # two versions, keyed by event time
     # re-load the same batch → nothing new
@@ -151,7 +199,7 @@ def test_satellite_rows_versions_and_idempotency(spark):
 
 
 def test_effectivity_rows_deleted_flag(spark):
-    b = _staged(
+    staged = _staged(
         spark,
         [
             (Operation.CREATE, T0, "m1", "Movie 1", 5),
@@ -159,7 +207,6 @@ def test_effectivity_rows_deleted_flag(spark):
             (Operation.UPDATE, T1, "m2", "x", 1),  # UPDATE not in effectivity ops
         ],
     )
-    staged = rv._with_load_meta(b, C, T2, "test")
     eff = rv.effectivity_rows(staged)
     rows = {(r[C.load_date()], r[C.deleted()]) for r in eff.collect()}
     assert rows == {(T0, False), (T1, True)}
@@ -169,14 +216,13 @@ def test_effectivity_rows_same_timestamp_tie_prefers_delete(spark):
     """CREATE and DELETE for one key at the same event time must resolve
     deterministically — DELETE wins (ADVICE: dropDuplicates kept an
     arbitrary row)."""
-    b = _staged(
+    staged = _staged(
         spark,
         [
             (Operation.CREATE, T0, "m1", "Movie 1", 5),
             (Operation.DELETE, T0, "m1", "Movie 1", 5),
         ],
     )
-    staged = rv._with_load_meta(b, C, T2, "test")
     for _ in range(3):  # stable across re-evaluations
         rows = rv.effectivity_rows(staged).collect()
         assert len(rows) == 1

@@ -164,3 +164,29 @@ def test_load_references_from_tables(raw, spark):
     assert ref.count() == 5
     raw.load_references_from_table("cctl_genre", "lookups", "ID", ["NAME"])
     assert spark.table(f"stw_raw.{C.ref_name('lookups')}").count() == 5
+
+
+@pytest.mark.parametrize(
+    "create, load",
+    [
+        ("create_reference_table", "load_references_from_tables"),
+        ("create_code_reference_table", "load_code_references_from_tables"),
+    ],
+)
+def test_multi_table_reference_loads_write_nothing_for_empty_list(
+    raw, spark, monkeypatch, create, load
+):
+    """No staging tables means no write (not an IndexError on the empty
+    list of per-table parts)."""
+    name = f"empty_{create}"
+    getattr(raw, create)(
+        name, ColumnDefinition("ID", T.StringType(), False),
+        [ColumnDefinition("NAME", T.StringType())],
+    )
+    appended = []
+    monkeypatch.setattr(
+        RawVault, "_append", lambda self, df, table, bucket_columns: appended.append(table)
+    )
+    getattr(raw, load)([], name, "ID", ["NAME"])
+    assert appended == []
+    assert spark.table(f"stw_raw.{C.ref_name(name)}").count() == 0
