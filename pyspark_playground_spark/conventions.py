@@ -187,8 +187,3 @@ class VaultConfig:
     #: record-source literal stamped on staged rows
     record_source: str = "source"
     table_format: str = "parquet"
-    #: force-broadcast FK→hkey resolution mappings in link loads. True is
-    #: right for dimension-sized hubs; set False for billion-key hubs so
-    #: AQE picks the join strategy from runtime statistics instead of
-    #: shipping the mapping to every executor (and the driver's memory).
-    broadcast_resolutions: bool = True

@@ -423,7 +423,6 @@ def pit_rows_incremental(
     *,
     conv: DataVaultConventions = CONV,
     end_of_time=END_OF_TIME,
-    broadcast_touched: bool = True,
 ) -> DataFrame:
     """Incremental PIT maintenance: refresh only the keys a batch touched.
 
@@ -434,22 +433,20 @@ def pit_rows_incremental(
         (existing PIT minus touched keys) ∪ recompute(touched keys only)
 
     ``touched_hkeys`` is a 1-column DataFrame of hkeys (e.g. the staged
-    batch's distinct hkeys — typically tiny, so both the anti-join and the
-    semi-join broadcast). For giant backfill batches pass
-    ``broadcast_touched=False`` and let AQE pick from runtime stats — a
-    forced broadcast of a non-tiny side is the one hint that OOMs at
-    scale. With the PIT stored bucketed by hkey the untouched side is
-    read and rewritten partition-aligned; with Delta, the same shape
-    becomes a partition-pruned MERGE. Output equals ``pit_rows`` over the
+    batch's distinct hkeys). It grows with the batch, so no join hint is
+    emitted: Spark's size statistics, and AQE at runtime, broadcast it when
+    it is small and shuffle it for a giant backfill. With the PIT stored
+    bucketed by hkey the untouched side is read and rewritten
+    partition-aligned; with Delta, the same shape becomes a
+    partition-pruned MERGE. Output equals ``pit_rows`` over the
     full satellite — pinned by tests.
     """
     hkey = conv.hkey()
-    hint = F.broadcast if broadcast_touched else (lambda d: d)
     touched = touched_hkeys.select(F.col(touched_hkeys.columns[0]).alias(hkey)).distinct()
-    untouched = existing_pit.join(hint(touched), hkey, "left_anti")
-    sat_touched = satellite.join(hint(touched), hkey, "left_semi")
+    untouched = existing_pit.join(touched, hkey, "left_anti")
+    sat_touched = satellite.join(touched, hkey, "left_semi")
     eff_touched = (
-        effectivity.join(hint(touched), hkey, "left_semi")
+        effectivity.join(touched, hkey, "left_semi")
         if effectivity is not None
         else None
     )

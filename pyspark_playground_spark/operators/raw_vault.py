@@ -28,6 +28,20 @@ Load metadata: every kernel takes the staged frame exactly as
   ``record_source`` argument (``"unknown"`` when it is None).
 - Satellite and effectivity-satellite ``$__LOAD_DATE`` is the event time.
 
+FK resolution: every link member turns its FK into the target hub's hkey
+through ``_resolve_fk`` (reference RawVault.py:523-534, J15 660-708).
+
+- With no mapping, the hkey is ``hash(fk)`` (the FK is the target's
+  business key).
+- With a ``(key, hkey)`` mapping (the staged target and/or the hub), one
+  mapping row per string key is kept and left-joined on the string form
+  of both keys.
+- A null FK or an unmatched key gives a null hkey. ``link_rows`` forms no
+  link from it; a multilink keeps the row, and its link hkey hashes the
+  other members (``concat_ws`` skips nulls).
+- No join hint: the mapping grows with the hub, so Spark's size
+  statistics, and AQE at runtime, pick broadcast or shuffle.
+
 Design differences from the reference (deliberate, Spark-first):
 
 - Loaders are pure DataFrame→DataFrame kernels; the ``RawVault`` class is a
@@ -169,6 +183,31 @@ def _batch_meta(
         ts.alias(conv.load_date()),
         F.lit(record_source or "unknown").alias(conv.record_source()),
     ]
+
+
+def _resolve_fk(
+    df: DataFrame,
+    fk_column: str,
+    hkey_column: str,
+    mapping: DataFrame | None,
+    hash_function: str,
+) -> DataFrame:
+    """Add ``hkey_column``: the hub hkey of ``fk_column`` by the module's FK rule.
+
+    ``mapping``'s first two columns are ``(key, hkey)``.
+    """
+    if mapping is None:
+        return df.withColumn(
+            hkey_column,
+            F.when(F.col(fk_column).isNotNull(), hash_key([fk_column], hash_function)),
+        )
+    key_col, map_hkey = mapping.columns[:2]
+    mapping = mapping.select(
+        F.col(key_col).cast("string").alias("__map_key"), F.col(map_hkey).alias(hkey_column)
+    ).dropDuplicates(["__map_key"])
+    return df.join(
+        mapping, df[fk_column].cast("string") == mapping["__map_key"], "left"
+    ).drop("__map_key")
 
 
 # ---------------------------------------------------------------------------
@@ -314,10 +353,8 @@ def link_rows(
     ``(new_link_rows, new_effectivity_rows)``.
 
     ``staged_from`` must carry ``$__HKEY`` (the from-hub hkey), the CDC
-    columns, and ``fk_column``. Target hkeys resolve either directly
-    (``to_resolution is None`` → to_hkey = hash(fk)) or through a 2-column
-    mapping DataFrame ``(key, hkey)`` — the reference's staged-target /
-    hub⋈sat fallback (RawVault.py:523-534) generalized.
+    columns, and ``fk_column``. The target hkey follows the module's FK
+    rule, with ``to_resolution`` as the optional ``(key, hkey)`` mapping.
 
     Delete detection (RawVault.py:582-620): for every staged from-row, any
     *existing* link of the same from-hkey whose to-hkey differs from the
@@ -343,28 +380,7 @@ def link_rows(
     renamed = staged_from.withColumnRenamed(conv.hkey(), from_hkey)
     base = _filter_ops(renamed, conv, Operation.HUB_SAT_OPS)
 
-    if to_resolution is None:
-        resolved = base.withColumn(
-            to_hkey,
-            F.when(F.col(fk_column).isNotNull(), hash_key([fk_column], hash_function)),
-        )
-    else:
-        key_col, map_hkey = to_resolution.columns[:2]
-        mapping = (
-            to_resolution.select(
-                F.col(key_col).alias("__map_key"), F.col(map_hkey).alias(to_hkey)
-            ).dropDuplicates(["__map_key"])
-        )
-        # broadcast only for dimension-sized hubs (config.broadcast_resolutions,
-        # default True); off → AQE picks the strategy from runtime stats
-        if config is None or config.broadcast_resolutions:
-            mapping = F.broadcast(mapping)
-        resolved = base.join(
-            mapping,
-            base[fk_column].cast("string") == mapping["__map_key"].cast("string"),
-            "left",
-        ).drop("__map_key")
-
+    resolved = _resolve_fk(base, fk_column, to_hkey, to_resolution, hash_function)
     resolved = resolved.select(
         from_hkey, to_hkey, F.col(conv.load_date()).alias("__event_time")
     ).cache()
@@ -479,42 +495,19 @@ def resolve_member_hkeys(
     conv: DataVaultConventions = CONV,
     hash_function: str = "md5",
     resolutions: dict[str, DataFrame] | None = None,
-    config: VaultConfig | None = None,
 ) -> tuple[DataFrame, list[str]]:
     """Attach one hub-hkey column per link member and the combined link HKEY.
 
-    Each member FK resolves to its hub hkey either directly
-    (``hkey = hash(fk)``, valid when the FK *is* the target hub's business
-    key) or through a ``(key, hkey)`` mapping in ``resolutions[member.name]``
-    — the reference's staged-target / hub⋈sat fallback (RawVault.py:523-534).
+    Each member FK follows the module's FK rule, with
+    ``resolutions[member.name]`` as its optional ``(key, hkey)`` mapping.
     Returns ``(df, member_hkey_columns)``.
-
-    The mapping join is broadcast-hinted only when
-    ``config.broadcast_resolutions`` (default True — right for
-    dimension-sized hubs). With it off, no hint is emitted and AQE picks
-    broadcast vs shuffle from runtime statistics — the safe setting when a
-    hub can be billion-key (a forced broadcast there OOMs the executors).
     """
-    force_broadcast = config is None or config.broadcast_resolutions
     hkey_cols: list[str] = []
     for m in members:
         col_name = m.hkey_column or conv.hkey_of(m.name)
         hkey_cols.append(col_name)
-        res = (resolutions or {}).get(m.name)
-        if res is None:
-            df = df.withColumn(col_name, hash_key([m.foreign_key], hash_function))
-        else:
-            key_col, map_hkey = res.columns[:2]
-            mapping = res.select(
-                F.col(key_col).alias(f"__mk_{col_name}"), F.col(map_hkey).alias(col_name)
-            ).dropDuplicates([f"__mk_{col_name}"])
-            if force_broadcast:
-                mapping = F.broadcast(mapping)
-            df = df.join(
-                mapping,
-                df[m.foreign_key].cast("string") == mapping[f"__mk_{col_name}"].cast("string"),
-                "left",
-            ).drop(f"__mk_{col_name}")
+        mapping = (resolutions or {}).get(m.name)
+        df = _resolve_fk(df, m.foreign_key, col_name, mapping, hash_function)
     df = df.withColumn(conv.hkey(), hash_key(hkey_cols, hash_function))
     return df, hkey_cols
 
@@ -524,32 +517,45 @@ def multilink_rows(
     members: Sequence[LinkedHubDefinition],
     *,
     existing_link: DataFrame | None = None,
+    existing_effectivity: DataFrame | None = None,
     load_ts: datetime | None = None,
     record_source: str | None = None,
     conv: DataVaultConventions = CONV,
     config: VaultConfig | None = None,
     hash_function: str = "md5",
     resolutions: dict[str, DataFrame] | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """N-ary link from an association table (reference RawVault.py:660-708).
 
-    Each member FK resolves to its hub hkey (direct hash, or via an optional
-    broadcast mapping in ``resolutions[member.name]``); the link HKEY is the
-    hash of all member hkeys in declaration order.
+    Returns ``(new_link_rows, new_effectivity_rows)`` from one member
+    resolution (``resolve_member_hkeys``); the link HKEY is the hash of all
+    member hkeys in declaration order. CREATE|UPDATE|SNAPSHOT rows form
+    links; the effectivity satellite records the association's
+    CREATE|DELETE history (DELETE closes the link).
     """
-    df = _filter_ops(staged, conv, Operation.HUB_SAT_OPS)
-    df, hkey_cols = resolve_member_hkeys(
-        df, members, conv=conv, hash_function=hash_function,
-        resolutions=resolutions, config=config,
+    resolved, hkey_cols = resolve_member_hkeys(
+        staged.drop(conv.hkey()), members, conv=conv, hash_function=hash_function,
+        resolutions=resolutions,
     )
     # distinct() rather than dropDuplicates([hkey]): the hkey was just
     # computed as hash(member hkeys in order), so one row per hkey is one
     # row per tuple, and an all-grouping-keys aggregate has no first()
     # buffers, which keeps the md5 variant on HashAggregate
-    out = df.select(conv.hkey(), *hkey_cols).distinct()
-    out = _maybe_repartition(out, [conv.hkey()], config)
-    out = _anti(out, existing_link, [conv.hkey()])
-    return out.select(conv.hkey(), *hkey_cols, *_batch_meta(conv, load_ts, record_source))
+    links = (
+        _filter_ops(resolved, conv, Operation.HUB_SAT_OPS)
+        .select(conv.hkey(), *hkey_cols)
+        .distinct()
+    )
+    links = _maybe_repartition(links, [conv.hkey()], config)
+    links = _anti(links, existing_link, [conv.hkey()])
+    new_links = links.select(
+        conv.hkey(), *hkey_cols, *_batch_meta(conv, load_ts, record_source)
+    )
+    new_effectivity = effectivity_rows(
+        resolved, existing=existing_effectivity,
+        conv=conv, config=config, hash_function=hash_function,
+    )
+    return new_links, new_effectivity
 
 
 # ---------------------------------------------------------------------------

@@ -331,34 +331,18 @@ class RawVault:
         c = self.conv
         link_table = c.link_name(name)
         eff_table = c.effectivity_sat_name(name)
-
-        def load_links() -> None:
-            new_links = rv.multilink_rows(
-                staged, members,
-                existing_link=self._raw(link_table), load_ts=load_ts,
-                record_source=self.config.record_source,
-                conv=c, config=self.config, hash_function=self.config.hash_function,
-                resolutions=resolutions,
-            )
-            self._append(new_links, link_table, [c.hkey()])
-
-        def load_effectivity() -> None:
-            # association-table effectivity: DELETE ops close the link
-            staged_k, _ = rv.resolve_member_hkeys(
-                staged.drop(c.hkey()),
-                members,
-                conv=c,
-                hash_function=self.config.hash_function,
-                resolutions=resolutions,
-                config=self.config,
-            )
-            new_eff = rv.effectivity_rows(
-                staged_k, existing=self._raw(eff_table),
-                conv=c, config=self.config, hash_function=self.config.hash_function,
-            )
-            self._append(new_eff, eff_table, [c.hkey(), c.load_date()])
-
-        _run_concurrently(staged.sparkSession, [load_links, load_effectivity])
+        new_links, new_eff = rv.multilink_rows(
+            staged, members,
+            existing_link=self._raw(link_table),
+            existing_effectivity=self._raw(eff_table),
+            load_ts=load_ts, record_source=self.config.record_source,
+            conv=c, config=self.config, hash_function=self.config.hash_function,
+            resolutions=resolutions,
+        )
+        _run_concurrently(staged.sparkSession, [
+            partial(self._append, new_links, link_table, [c.hkey()]),
+            partial(self._append, new_eff, eff_table, [c.hkey(), c.load_date()]),
+        ])
 
     def create_point_in_time_table_for_single_satellite(
         self, pit_name: str, satellite_name: str

@@ -12,14 +12,20 @@ Semantics:
 
 - Every hub gets its satellites and an effectivity satellite; satellite
   attributes default to "all source columns minus the hub business keys".
-- Links whose ``source_table`` itself backs a hub are 2-ary FK links with
-  delete detection (reference ``load_link``); links sourced from a pure
-  association table (composite primary key, no hub) are N-ary multilinks.
-- FK targets resolve through the *staged* target table of the same batch,
-  falling back to hub⋈satellite for rows staged in earlier batches — the
-  reference's dual resolution (RawVault.py:523-534). This makes non-identity
-  business keys work: e.g. the imdb mapping keys HUB__MOVIES on (NAME, YEAR)
-  while castings reference movies by ID.
+- A link whose ``source_table`` itself backs a hub and that names one
+  target is a 2-ary FK link with delete detection (reference
+  ``load_link``). Every other link is an N-ary multilink: from a pure
+  association table (composite primary key, no hub), or from a hub-backed
+  table with several targets, which lists the source hub first (its FK is
+  the hub's single business-key column).
+- FK targets resolve through a ``(key, hkey)`` mapping: the *staged* target
+  table of the same batch unioned with the hub (or, when the FK column is
+  not a hub business key, the hub's satellite) for rows staged in earlier
+  batches — the reference's dual resolution (RawVault.py:523-534). The
+  raw-vault kernel applies the FK rule to it (one row per key, left join,
+  null for a null or unmatched FK). This makes non-identity business keys
+  work: e.g. the imdb mapping keys HUB__MOVIES on (NAME, YEAR) while
+  castings reference movies by ID.
 """
 
 from __future__ import annotations
@@ -27,7 +33,7 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 from datetime import datetime
-from functools import partial
+from functools import partial, reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -267,18 +273,29 @@ class DeclarativeVault:
                 )
             )
         for link in self.mapping.links:
-            members = self._member_hkey_columns(link)
+            members = [
+                m.hkey_column or self.conv.hkey_of(m.name) for m in self._link_members(link)
+            ]
             created.append(
                 self.vault.create_link(self._entity(link.name, link.source_table), members)
             )
         return created
 
-    def _member_hkey_columns(self, link: LinkMapping) -> list[str]:
-        cols = []
-        if link.source_table in self._hub_by_table:
-            cols.append(self.conv.hkey_of(link.source_table))
-        cols += [self.conv.hkey_of(m.target_table) for m in link.members]
-        return cols
+    def _link_members(self, link: LinkMapping) -> list[LinkedHubDefinition]:
+        """Link members in link-table column order: the source hub first when
+        the source table backs one (its FK is its business key), then the
+        targets. A 2-ary link reads the source hkey from the staged frame
+        instead; a multilink hashes the source hub's FK like any member."""
+        targets = [LinkedHubDefinition(m.target_table, m.source_column) for m in link.members]
+        hub = self._hub_by_table.get(link.source_table)
+        if hub is None:
+            return targets
+        if len(link.members) > 1 and len(hub.business_keys) > 1:
+            raise ValueError(
+                f"link {link.name}: source hub {hub.name} has a multi-column business "
+                f"key {list(hub.business_keys)}; a multilink needs a single-column FK"
+            )
+        return [LinkedHubDefinition(link.source_table, hub.business_keys[0]), *targets]
 
     # ---- load -------------------------------------------------------------
     def stage_batch(self, batch: dict[str, DataFrame]) -> dict[str, DataFrame]:
@@ -310,16 +327,11 @@ class DeclarativeVault:
         self, staged: dict[str, DataFrame], member: LinkMember
     ) -> DataFrame:
         """FK → target-hub-hkey mapping: staged target rows of this batch,
-        plus hub⋈satellite for earlier batches (RawVault.py:523-534)."""
-        conv = self.conv
-        parts: list[DataFrame] = []
+        plus hub or satellite rows for earlier batches (RawVault.py:523-534).
+        Keys may repeat; the raw-vault kernel keeps one row per key."""
+        sources: list[DataFrame] = []
         if member.target_table in staged:
-            parts.append(
-                staged[member.target_table].select(
-                    F.col(member.target_column).cast("string").alias("__key"),
-                    F.col(conv.hkey()).alias("__hkey"),
-                )
-            )
+            sources.append(staged[member.target_table])
         hub_map = self._hub_by_table.get(member.target_table)
         if hub_map is not None:
             entity = self._entity(hub_map.name, member.target_table)
@@ -327,12 +339,7 @@ class DeclarativeVault:
                 f"{self.config.raw_database}.{self.conv.hub_name(entity)}"
             )
             if member.target_column in hub_df.columns:
-                parts.append(
-                    hub_df.select(
-                        F.col(member.target_column).cast("string").alias("__key"),
-                        F.col(conv.hkey()).alias("__hkey"),
-                    )
-                )
+                sources.append(hub_df)
             else:
                 sat = next(
                     (s for s in self.mapping.satellites if s.hub == hub_map.name), None
@@ -343,22 +350,20 @@ class DeclarativeVault:
                         f"{self.conv.sat_name(self._entity(sat.name, sat.source_table))}"
                     )
                     if member.target_column in sat_df.columns:
-                        parts.append(
-                            sat_df.select(
-                                F.col(member.target_column).cast("string").alias("__key"),
-                                F.col(conv.hkey()).alias("__hkey"),
-                            )
-                        )
-        if not parts:
+                        sources.append(sat_df)
+        if not sources:
             raise ValueError(
                 f"cannot resolve FK {member.source_column} → "
                 f"{member.target_table}.{member.target_column}: column not staged, "
                 "not a hub business key, and not a satellite attribute"
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.dropDuplicates(["__key"])
+        return reduce(DataFrame.unionByName, [
+            df.select(
+                F.col(member.target_column).cast("string").alias("__key"),
+                F.col(self.conv.hkey()).alias("__hkey"),
+            )
+            for df in sources
+        ])
 
     def load_batch(
         self,
@@ -432,17 +437,13 @@ class DeclarativeVault:
                 load_ts=load_ts,
             )
         else:
-            members = [
-                LinkedHubDefinition(m.target_table, m.source_column)
-                for m in link.members
-            ]
             resolutions = {
                 m.target_table: self._resolution(staged, m) for m in link.members
             }
             self.vault.load_multilink(
                 staged[link.source_table],
                 entity,
-                members,
+                self._link_members(link),
                 load_ts=load_ts,
                 resolutions=resolutions,
             )

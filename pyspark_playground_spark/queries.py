@@ -229,7 +229,7 @@ def dv_multilink_lineitem(spark, sf_dir):
     from pyspark_playground_spark.conventions import LinkedHubDefinition
 
     staged = _staged(spark, sf_dir, "lineitem", [], "l_shipdate")
-    return rv.multilink_rows(
+    links, _ = rv.multilink_rows(
         staged,
         [
             LinkedHubDefinition("orders", "l_orderkey"),
@@ -239,6 +239,7 @@ def dv_multilink_lineitem(spark, sf_dir):
         load_ts=LOAD_TS,
         record_source="tpch",
     )
+    return links
 
 
 @query("dv_multilink_lineitem_xxh")
@@ -255,7 +256,7 @@ def dv_multilink_lineitem_xxh(spark, sf_dir):
     from pyspark_playground_spark.conventions import LinkedHubDefinition
 
     staged = _staged(spark, sf_dir, "lineitem", [], "l_shipdate")
-    return rv.multilink_rows(
+    links, _ = rv.multilink_rows(
         staged,
         [
             LinkedHubDefinition("orders", "l_orderkey"),
@@ -266,6 +267,7 @@ def dv_multilink_lineitem_xxh(spark, sf_dir):
         record_source="tpch",
         hash_function="xxhash64",
     )
+    return links
 
 
 @query(

@@ -14,8 +14,9 @@ from __future__ import annotations
 import math
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 

@@ -145,13 +145,13 @@ def main() -> None:
         rv.multilink_rows(
             li_staged, members, load_ts=datetime(2026, 1, 2),
             record_source="probe",
-        ).write.format("noop").mode("overwrite").save()
+        )[0].write.format("noop").mode("overwrite").save()
 
     def multilink_xxh():
         rv.multilink_rows(
             li_staged, members, load_ts=datetime(2026, 1, 2),
             record_source="probe", hash_function="xxhash64",
-        ).write.format("noop").mode("overwrite").save()
+        )[0].write.format("noop").mode("overwrite").save()
 
     timed("multilink_md5", n_li, multilink_md5)
     timed("multilink_xxh", n_li, multilink_xxh)

@@ -467,3 +467,75 @@ def test_run_concurrently_finishes_every_write_then_raises_first_failure(spark):
         )
     assert done.is_set()
     assert not [t for t in threading.enumerate() if t.name.startswith("vault-write")]
+
+
+# ---------------------------------------------------------------------------
+# a multilink whose source table backs a hub
+# ---------------------------------------------------------------------------
+
+HUB_SOURCE_SCHEMA_JSON = """
+{"name": "abc", "tables": [
+  {"name": "a", "columns": [{"name": "ID", "type": "text"}], "primaryKey": ["ID"]},
+  {"name": "b", "columns": [{"name": "ID", "type": "text"}], "primaryKey": ["ID"]},
+  {"name": "c", "columns": [{"name": "ID", "type": "text"}, {"name": "NAME", "type": "text"},
+                            {"name": "A_ID", "type": "text"}, {"name": "B_ID", "type": "text"}],
+   "primaryKey": ["ID"]}
+]}
+"""
+
+HUB_SOURCE_MAPPING_YAML = """
+hubs:
+  - {name: HUB__A, source_table: a, business_keys: [ID]}
+  - {name: HUB__B, source_table: b, business_keys: [ID]}
+  - {name: HUB__C, source_table: c, business_keys: %s}
+links:
+  - name: LNK__C
+    source_table: c
+    to:
+      - {source_column: A_ID, source_foreign_key: {table: a, column: ID}}
+      - {source_column: B_ID, source_foreign_key: {table: b, column: ID}}
+"""
+
+
+def _hub_source_vault(spark, prefix, business_keys):
+    spark.sql(f"DROP DATABASE IF EXISTS {prefix}_staging CASCADE")
+    spark.sql(f"DROP DATABASE IF EXISTS {prefix}_raw CASCADE")
+    return DeclarativeVault(
+        spark, SourceSchema.from_json(HUB_SOURCE_SCHEMA_JSON),
+        VaultMapping.from_yaml(HUB_SOURCE_MAPPING_YAML % business_keys),
+        VaultConfig(staging_prepared_database=f"{prefix}_staging", raw_database=f"{prefix}_raw"),
+    )
+
+
+def test_multilink_from_hub_backed_source_writes_every_member(spark):
+    """Source hub C with FKs to A and B: LNK__C has the columns
+    create_tables declared (C's hkey first), and every member hkey of every
+    link row exists in its hub."""
+    v = _hub_source_vault(spark, "decl_hubsrc", "[ID]")
+    v.create_tables()
+    key = "OPERATION string, LOAD_DATE timestamp, ID string"
+    batch = {
+        "a": spark.createDataFrame([("snapshot", T0, "a1"), ("snapshot", T0, "a2")], key),
+        "b": spark.createDataFrame([("snapshot", T0, "b1")], key),
+        "c": spark.createDataFrame(
+            [("snapshot", T0, "c1", "x", "a1", "b1"), ("snapshot", T0, "c2", "y", "a2", "b1")],
+            f"{key}, NAME string, A_ID string, B_ID string",
+        ),
+    }
+    v.load_batch(batch, load_ts=L0)
+
+    link = spark.table("decl_hubsrc_raw.LNK__C")
+    members = [C.hkey_of(h) for h in ("c", "a", "b")]
+    assert link.columns[1:4] == members
+    assert link.count() == 2
+    for col, hub in zip(members, ("HUB__C", "HUB__A", "HUB__B")):
+        hub_keys = spark.table(f"decl_hubsrc_raw.{hub}").select(F.col(C.hkey()).alias(col))
+        assert link.join(hub_keys, col, "left_anti").count() == 0, col
+
+
+def test_multilink_from_multi_column_hub_source_is_rejected(spark):
+    """A multilink hashes the source hub's FK like any member, so the hub
+    needs a single-column business key."""
+    v = _hub_source_vault(spark, "decl_hubsrc2", "[ID, NAME]")
+    with pytest.raises(ValueError, match="multi-column business key"):
+        v.create_tables()

@@ -10,10 +10,11 @@ pandas frames only.
 """
 
 import sys
+from pathlib import Path
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
 
 from check_oracle import lint_oracle_types  # noqa: E402
 

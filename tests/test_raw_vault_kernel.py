@@ -5,6 +5,7 @@ Scenario mirrors the reference's golden CDC test structure
 CREATE/UPDATE/DELETE/SNAPSHOT ops across batches.
 """
 
+import hashlib
 import re
 from datetime import datetime
 
@@ -15,6 +16,7 @@ from pyspark.sql import types as T
 from pyspark_playground_spark.conventions import (
     ColumnDefinition,
     DataVaultConventions,
+    LinkedHubDefinition,
     Operation,
     VaultConfig,
 )
@@ -229,52 +231,109 @@ def test_effectivity_rows_same_timestamp_tie_prefers_delete(spark):
         assert rows[0][C.deleted()] is True
 
 
-def _member_staged(spark):
-    schema = "OPERATION int, LOAD_DATE timestamp, ORDER_ID string, CUST_CODE string"
-    df = spark.createDataFrame(
-        [
-            (Operation.CREATE, T0, "o1", "ca"),
-            (Operation.CREATE, T0, "o2", "cb"),
-        ],
-        schema,
-    )
-    return rv.prepare_staging(
-        df, load_date_column="LOAD_DATE", operation_column="OPERATION",
-        record_source="test", hkey_columns=["ORDER_ID"],
-    )
+def _md5(text):
+    return hashlib.md5(text.encode()).hexdigest()
 
 
-def test_resolve_member_hkeys_broadcast_is_conditional(spark):
-    """broadcast_resolutions=False emits no broadcast hint (AQE decides);
-    results are identical either way."""
-    from pyspark_playground_spark.conventions import LinkedHubDefinition, VaultConfig
-
-    staged = _member_staged(spark)
-    mapping = spark.createDataFrame(
-        [("ca", "hk_a"), ("cb", "hk_b")], "code string, hkey string"
+@pytest.mark.parametrize("mapped", [False, True], ids=["direct", "mapped"])
+def test_multilink_null_fk_gives_null_member_hkey(spark, mapped):
+    """A null FK resolves to a null member hkey, with or without a mapping,
+    and the link hkey hashes the other members (``concat_ws`` skips the
+    null) — what dv_multilink_lineitem's DuckDB oracle computes."""
+    rows = [
+        (Operation.CREATE, T0, ok, None if ok % 10 == 0 else ok % 7, ok % 3)
+        for ok in range(1, 51)
+    ]
+    staged = rv.prepare_staging(
+        spark.createDataFrame(
+            rows,
+            "OPERATION int, LOAD_DATE timestamp, l_orderkey bigint, "
+            "l_partkey bigint, l_suppkey bigint",
+        ),
+        load_date_column="LOAD_DATE", operation_column="OPERATION", record_source="t",
     )
     members = [
-        LinkedHubDefinition("orders", "ORDER_ID"),
-        LinkedHubDefinition("customers", "CUST_CODE"),
+        LinkedHubDefinition("orders", "l_orderkey"),
+        LinkedHubDefinition("part", "l_partkey"),
+        LinkedHubDefinition("supplier", "l_suppkey"),
     ]
-    res = {"customers": mapping}
+    resolutions = None
+    if mapped:
+        # staged part rows plus hub rows: every key twice
+        parts = spark.range(7).select(
+            F.col("id").alias("p_partkey"),
+            hash_key(["id"]).alias(C.hkey()),
+        )
+        resolutions = {"part": parts.unionByName(parts)}
+    links, _ = rv.multilink_rows(staged, members, load_ts=T1, resolutions=resolutions)
+    got = {
+        (r["$__HKEY_ORDERS"], r["$__HKEY_PART"], r["$__HKEY_SUPPLIER"]): r[C.hkey()]
+        for r in links.collect()
+    }
+    want = {}
+    for _, _, ok, pk, sk in rows:
+        members_hk = [_md5(str(ok)), None if pk is None else _md5(str(pk)), _md5(str(sk))]
+        want[tuple(members_hk)] = _md5(",".join(h for h in members_hk if h is not None))
+    assert got == want
+    assert sum(pk is None for _, pk, _ in got) == 5
 
-    forced, cols = rv.resolve_member_hkeys(
-        staged, members, resolutions=res,
-        config=VaultConfig(broadcast_resolutions=True),
+
+def test_declarative_multilink_plan_has_no_forced_broadcast(spark, sf_dir, monkeypatch):
+    """FK resolution emits no join hint. On a parquet-backed bulk batch at
+    sf0.001 the size statistics still pick broadcast joins, and each mapped
+    member is deduplicated once (one partial + one final SortAggregate:
+    first() over the string hkey)."""
+    from pyspark_playground_spark.plans.declarative import (
+        DeclarativeVault,
+        SourceSchema,
+        VaultMapping,
     )
-    free, cols2 = rv.resolve_member_hkeys(
-        staged, members, resolutions=res,
-        config=VaultConfig(broadcast_resolutions=False),
+
+    hubs = {"orders": "o_orderkey", "part": "p_partkey", "supplier": "s_suppkey"}
+    batch = {
+        t: spark.read.parquet(f"{sf_dir}/{t}.parquet").select(
+            F.lit("snapshot").alias("OPERATION"), F.lit(T0).alias("LOAD_DATE"), "*"
+        )
+        for t in [*hubs, "lineitem"]
+    }
+    schema = SourceSchema.from_dict({"tables": [
+        {"name": t, "columns": [{"name": c, "type": d} for c, d in df.dtypes],
+         "primaryKey": [hubs.get(t, "l_orderkey")]}
+        for t, df in batch.items()
+    ]})
+    fks = {"orders": "l_orderkey", "part": "l_partkey", "supplier": "l_suppkey"}
+    mapping = VaultMapping.from_dict({
+        "hubs": [{"name": t, "source_table": t, "business_keys": [k]} for t, k in hubs.items()],
+        "links": [{"name": "LNK__LINEITEM", "source_table": "lineitem", "to": [
+            {"source_column": fks[t], "source_foreign_key": {"table": t, "column": k}}
+            for t, k in hubs.items()
+        ]}],
+    })
+    spark.sql("DROP DATABASE IF EXISTS rvk_plan_stg CASCADE")
+    spark.sql("DROP DATABASE IF EXISTS rvk_plan_raw CASCADE")
+    dv = DeclarativeVault(spark, schema, mapping, VaultConfig(
+        staging_prepared_database="rvk_plan_stg", raw_database="rvk_plan_raw",
+    ))
+    dv.create_tables()
+    appended = {}
+    append = RawVault._append
+
+    def capture(self, frame, table, bucket_columns):
+        appended[table] = frame
+        append(self, frame, table, bucket_columns)
+
+    monkeypatch.setattr(RawVault, "_append", capture)
+    dv.load_batch(batch, load_ts=T1)
+
+    link = appended["LNK__LINEITEM"]
+    assert "ResolvedHint" not in link._jdf.queryExecution().analyzed().toString()
+    plan = link._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert plan.count("SortAggregate") == 2 * len(hubs), plan
+    assert spark.table("rvk_plan_raw.LNK__LINEITEM").count() == (
+        batch["lineitem"].select(*fks.values()).distinct().count()
     )
-    assert cols == cols2
-    sel = [C.hkey()] + cols
-    assert sorted(map(tuple, forced.select(sel).collect())) == sorted(
-        map(tuple, free.select(sel).collect())
-    )
-    # the hint itself must be present/absent in the analyzed plans
-    assert "ResolvedHint" in forced._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" not in free._jdf.queryExecution().analyzed().toString()
 
 
 def test_link_rows_with_delete_detection(spark):

@@ -15,8 +15,9 @@ No SparkSession needed: this inspects the registry dicts only.
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark_playground_spark import queries as q  # noqa: E402
 
