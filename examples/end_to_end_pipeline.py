@@ -60,7 +60,8 @@ CDC_SCHEMA = T.StructType([
 ])
 
 
-def main() -> None:
+def main(sf_dir: str | None = None) -> None:
+    """``sf_dir`` is ignored: the demo builds its CDC batches in-process."""
     work = tempfile.mkdtemp(prefix="e2e-")
     spark = get_spark(app_name="e2e-demo", master="local[4]", shuffle_partitions=4,
                       warehouse_dir=f"{work}/warehouse")
@@ -70,7 +71,6 @@ def main() -> None:
         raw_database="shop_raw",
         curated_database="shop_curated",
         record_source="shop-cdc",
-        optimize_partitioning=False,
     )
 
     # 1. declarative vault from the spec

@@ -87,7 +87,6 @@ def main(sf_dir: str | None = None) -> None:
         raw_database=f"corpus_raw_{run}",
         curated_database=f"corpus_curated_{run}",
         record_source="crawler-cdc",
-        optimize_partitioning=False,
     )
     work = tempfile.mkdtemp(prefix="vault-corpus-")
 

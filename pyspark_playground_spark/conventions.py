@@ -169,21 +169,20 @@ class LinkedHubDefinition:
 
 @dataclass
 class VaultConfig:
-    """Physical/layout knobs (reference: RawVault.py:23-47).
+    """Where a vault lives and how it keys rows (reference: RawVault.py:23-47).
 
-    ``partition_size`` mirrors the reference default of 5 buckets; at real
-    cluster scale you would raise this to O(cores) and let AQE coalesce.
+    No layout knobs: every vault table is unbucketed parquet, and Spark and
+    AQE choose the partitioning (see ``sources/catalog.py``). The
+    reference's fixed ``partition_size=5`` buckets are deliberately not
+    ported.
     """
 
     staging_base_path: str = ""
     staging_prepared_database: str = "staging_prepared"
     raw_database: str = "raw_vault"
     curated_database: str = "curated"
-    partition_size: int = 5
-    optimize_partitioning: bool = True
     #: 'md5' for hash parity with the reference; 'xxhash64' as the cheap
     #: scale option (8-byte keys instead of 32-char strings).
     hash_function: str = "md5"
     #: record-source literal stamped on staged rows
     record_source: str = "source"
-    table_format: str = "parquet"

@@ -435,11 +435,12 @@ def pit_rows_incremental(
     ``touched_hkeys`` is a 1-column DataFrame of hkeys (e.g. the staged
     batch's distinct hkeys). It grows with the batch, so no join hint is
     emitted: Spark's size statistics, and AQE at runtime, broadcast it when
-    it is small and shuffle it for a giant backfill. With the PIT stored
-    bucketed by hkey the untouched side is read and rewritten
-    partition-aligned; with Delta, the same shape becomes a
-    partition-pruned MERGE. Output equals ``pit_rows`` over the
-    full satellite — pinned by tests.
+    it is small and shuffle it for a giant backfill. The PIT is an
+    unbucketed table like every vault table, so the untouched side is
+    still scanned and rewritten in full; only the recompute is
+    batch-sized. With Delta, the same shape becomes a partition-pruned
+    MERGE. Output equals ``pit_rows`` over the full satellite — pinned by
+    tests.
     """
     hkey = conv.hkey()
     touched = touched_hkeys.select(F.col(touched_hkeys.columns[0]).alias(hkey)).distinct()

@@ -49,8 +49,9 @@ Design differences from the reference (deliberate, Spark-first):
   ``foreachBatch`` streaming sinks unchanged.
 - ``load_ts`` is an explicit parameter (default: current timestamp) so loads
   are reproducible/oracle-checkable.
-- Anti-join keys are repartitioned only when ``optimize_partitioning`` —
-  at scale prefer AQE + bucketed table layout (see ``sources/catalog.py``).
+- No fixed hash-partitioning before the anti-joins (reference X1: 5
+  partitions on the anti-join keys): Spark and AQE choose the
+  partitioning, and vault tables are unbucketed (see ``sources/catalog.py``).
 """
 
 from __future__ import annotations
@@ -65,7 +66,6 @@ from pyspark_playground_spark.conventions import (
     DataVaultConventions,
     LinkedHubDefinition,
     Operation,
-    VaultConfig,
 )
 from pyspark_playground_spark.functions.hashing import hash_diff, hash_key
 
@@ -142,16 +142,6 @@ def _filter_ops(df: DataFrame, conv: DataVaultConventions, ops: Sequence[int]) -
     return df
 
 
-def _maybe_repartition(
-    df: DataFrame, keys: Sequence[str], config: VaultConfig | None
-) -> DataFrame:
-    """Reference X1 (RawVault.py:760-761 etc.): hash-partition on the
-    anti-join keys before the join/write when ``optimize_partitioning``."""
-    if config is not None and config.optimize_partitioning:
-        return df.repartition(config.partition_size, *[F.col(k) for k in keys])
-    return df
-
-
 def _anti(
     df: DataFrame, existing: DataFrame | None, keys: Sequence[str]
 ) -> DataFrame:
@@ -222,7 +212,6 @@ def hub_rows(
     load_ts: datetime | None = None,
     record_source: str | None = None,
     conv: DataVaultConventions = CONV,
-    config: VaultConfig | None = None,
     hash_function: str = "md5",
 ) -> DataFrame:
     """New hub rows: one per unseen business entity.
@@ -234,7 +223,6 @@ def hub_rows(
     if conv.hkey() not in df.columns:
         df = df.withColumn(conv.hkey(), hash_key(list(business_key_columns), hash_function))
     df = df.select(conv.hkey(), *business_key_columns).dropDuplicates([conv.hkey()])
-    df = _maybe_repartition(df, [conv.hkey()], config)
     df = _anti(df, existing, [conv.hkey()])
     return df.select(
         conv.hkey(), *_batch_meta(conv, load_ts, record_source), *business_key_columns
@@ -251,7 +239,6 @@ def satellite_rows(
     *,
     existing: DataFrame | None = None,
     conv: DataVaultConventions = CONV,
-    config: VaultConfig | None = None,
     hash_function: str = "md5",
 ) -> DataFrame:
     """New satellite versions keyed on (HKEY, LOAD_DATE = CDC event time).
@@ -266,7 +253,6 @@ def satellite_rows(
     df = df.select(
         conv.hkey(), conv.hdiff(), conv.load_date(), *attribute_columns
     ).dropDuplicates([conv.hkey(), conv.load_date()])
-    df = _maybe_repartition(df, [conv.hkey(), conv.load_date()], config)
     return _anti(df, existing, [conv.hkey(), conv.load_date()])
 
 
@@ -275,7 +261,6 @@ def effectivity_rows(
     *,
     existing: DataFrame | None = None,
     conv: DataVaultConventions = CONV,
-    config: VaultConfig | None = None,
     hash_function: str = "md5",
 ) -> DataFrame:
     """New effectivity-satellite rows: the delete/undelete history of a hub.
@@ -300,7 +285,6 @@ def effectivity_rows(
     )
     df = df.withColumn(conv.hdiff(), hash_diff([F.col(conv.deleted())], hash_function))
     df = df.select(conv.hkey(), conv.hdiff(), conv.deleted(), conv.load_date())
-    df = _maybe_repartition(df, [conv.hkey(), conv.load_date()], config)
     return _anti(df, existing, [conv.hkey(), conv.load_date()])
 
 
@@ -343,7 +327,6 @@ def link_rows(
     load_ts: datetime | None = None,
     record_source: str | None = None,
     conv: DataVaultConventions = CONV,
-    config: VaultConfig | None = None,
     hash_function: str = "md5",
     cache_registry: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -400,7 +383,6 @@ def link_rows(
         pairs.select(conv.hkey(), F.col(from_hkey), F.col(to_hkey))
         .distinct()
     )
-    new_links = _maybe_repartition(new_links, [conv.hkey()], config)
     new_links = _anti(new_links, existing_link, [conv.hkey()])
     new_links = new_links.select(
         conv.hkey(),
@@ -481,7 +463,6 @@ def link_rows(
     history = history.withColumn(
         conv.hdiff(), hash_diff([F.col(conv.deleted())], hash_function)
     ).select(conv.hkey(), conv.hdiff(), conv.deleted(), conv.load_date())
-    history = _maybe_repartition(history, [conv.hkey(), conv.load_date()], config)
     new_effectivity = _anti(
         history, existing_effectivity, [conv.hkey(), conv.load_date()]
     )
@@ -521,7 +502,6 @@ def multilink_rows(
     load_ts: datetime | None = None,
     record_source: str | None = None,
     conv: DataVaultConventions = CONV,
-    config: VaultConfig | None = None,
     hash_function: str = "md5",
     resolutions: dict[str, DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -546,14 +526,12 @@ def multilink_rows(
         .select(conv.hkey(), *hkey_cols)
         .distinct()
     )
-    links = _maybe_repartition(links, [conv.hkey()], config)
     links = _anti(links, existing_link, [conv.hkey()])
     new_links = links.select(
         conv.hkey(), *hkey_cols, *_batch_meta(conv, load_ts, record_source)
     )
     new_effectivity = effectivity_rows(
-        resolved, existing=existing_effectivity,
-        conv=conv, config=config, hash_function=hash_function,
+        resolved, existing=existing_effectivity, conv=conv, hash_function=hash_function,
     )
     return new_links, new_effectivity
 
@@ -569,7 +547,6 @@ def reference_rows(
     *,
     existing: DataFrame | None = None,
     conv: DataVaultConventions = CONV,
-    config: VaultConfig | None = None,
     hash_function: str = "md5",
 ) -> DataFrame:
     """Slowly-changing reference table rows keyed on (id, LOAD_DATE).
@@ -581,7 +558,6 @@ def reference_rows(
     df = df.select(
         conv.hdiff(), conv.load_date(), id_column, *attribute_columns
     ).dropDuplicates([id_column, conv.load_date()])
-    df = _maybe_repartition(df, [id_column, conv.load_date()], config)
     return _anti(df, existing, [id_column, conv.load_date()])
 
 
@@ -593,7 +569,6 @@ def code_reference_rows(
     *,
     existing: DataFrame | None = None,
     conv: DataVaultConventions = CONV,
-    config: VaultConfig | None = None,
     hash_function: str = "md5",
 ) -> DataFrame:
     """Many lookup tables sharing one storage table, discriminated by
@@ -606,5 +581,4 @@ def code_reference_rows(
         .select(conv.group(), conv.hdiff(), conv.load_date(), id_column, *attribute_columns)
         .dropDuplicates([conv.group(), id_column, conv.load_date()])
     )
-    df = _maybe_repartition(df, [conv.group(), id_column, conv.load_date()], config)
     return _anti(df, existing, [conv.group(), id_column, conv.load_date()])

@@ -47,6 +47,14 @@ def _run_concurrently(session: SparkSession, writes: Sequence[Callable[[], None]
         f.result()
 
 
+def _effectivity_or_none(
+    spark: SparkSession, config: VaultConfig, conv: DataVaultConventions, name: str
+) -> DataFrame | None:
+    """``name``'s effectivity satellite, or None when the catalog has no such table."""
+    table = f"{config.raw_database}.{conv.effectivity_sat_name(name)}"
+    return spark.table(table) if spark.catalog.tableExists(table) else None
+
+
 class RawVault:
     """Insert-only raw vault over catalog tables (reference RawVault.py:53-1075)."""
 
@@ -86,8 +94,6 @@ class RawVault:
             self.config.raw_database,
             table,
             self._system_cols() + list(business_key_columns),
-            config=self.config,
-            bucket_columns=[self.conv.hkey()],
         )
         self.create_effectivity_satellite(name)
         return table
@@ -98,10 +104,7 @@ class RawVault:
         cols = self._system_cols()[:1] + [
             ColumnDefinition(col, self._hash_type(), True) for col in member_hkey_columns
         ] + self._system_cols()[1:]
-        catalog.create_table(
-            self.spark, self.config.raw_database, table, cols,
-            config=self.config, bucket_columns=[c.hkey()],
-        )
+        catalog.create_table(self.spark, self.config.raw_database, table, cols)
         self.create_effectivity_satellite(name)
         return table
 
@@ -113,10 +116,7 @@ class RawVault:
             ColumnDefinition(c.hdiff(), self._hash_type(), False),
             ColumnDefinition(c.load_date(), T.TimestampType(), False),
         ] + list(attributes)
-        catalog.create_table(
-            self.spark, self.config.raw_database, table, cols,
-            config=self.config, bucket_columns=[c.hkey(), c.load_date()],
-        )
+        catalog.create_table(self.spark, self.config.raw_database, table, cols)
         return table
 
     def create_effectivity_satellite(self, name: str) -> str:
@@ -128,10 +128,7 @@ class RawVault:
             ColumnDefinition(c.deleted(), T.BooleanType(), False),
             ColumnDefinition(c.load_date(), T.TimestampType(), False),
         ]
-        catalog.create_table(
-            self.spark, self.config.raw_database, table, cols,
-            config=self.config, bucket_columns=[c.hkey(), c.load_date()],
-        )
+        catalog.create_table(self.spark, self.config.raw_database, table, cols)
         return table
 
     def create_reference_table(
@@ -144,7 +141,7 @@ class RawVault:
             ColumnDefinition(c.load_date(), T.TimestampType(), False),
             id_column,
         ] + list(attributes)
-        catalog.create_table(self.spark, self.config.raw_database, table, cols, config=self.config)
+        catalog.create_table(self.spark, self.config.raw_database, table, cols)
         return table
 
     def create_code_reference_table(
@@ -158,7 +155,7 @@ class RawVault:
             ColumnDefinition(c.load_date(), T.TimestampType(), False),
             id_column,
         ] + list(attributes)
-        catalog.create_table(self.spark, self.config.raw_database, table, cols, config=self.config)
+        catalog.create_table(self.spark, self.config.raw_database, table, cols)
         return table
 
     # ---- staging (reference RawVault.py:996-1043) -------------------------
@@ -186,12 +183,7 @@ class RawVault:
             hash_function=self.config.hash_function,
         )
         catalog.write_table(
-            staged,
-            self.config.staging_prepared_database,
-            name,
-            mode="overwrite",
-            config=self.config,
-            bucket_columns=[self.conv.hkey()] if hkey_columns else None,
+            staged, self.config.staging_prepared_database, name, mode="overwrite"
         )
         return self.spark.table(f"{self.config.staging_prepared_database}.{name}")
 
@@ -213,11 +205,8 @@ class RawVault:
             if t.database == self.config.raw_database:
                 self.spark.catalog.refreshTable(f"{t.database}.{t.name}")
 
-    def _append(self, df: DataFrame, table: str, bucket_columns: Sequence[str]) -> None:
-        catalog.write_table(
-            df, self.config.raw_database, table,
-            mode="append", config=self.config, bucket_columns=bucket_columns,
-        )
+    def _append(self, df: DataFrame, table: str) -> None:
+        catalog.write_table(df, self.config.raw_database, table, mode="append")
 
     def load_hub(
         self,
@@ -246,24 +235,24 @@ class RawVault:
                 staged, business_key_columns,
                 existing=self._raw(hub_table), load_ts=load_ts,
                 record_source=self.config.record_source,
-                conv=c, config=self.config, hash_function=self.config.hash_function,
+                conv=c, hash_function=self.config.hash_function,
             )
-            self._append(new_hubs, hub_table, [c.hkey()])
+            self._append(new_hubs, hub_table)
 
         def load_effectivity() -> None:
             new_eff = rv.effectivity_rows(
                 staged, existing=self._raw(eff_table),
-                conv=c, config=self.config, hash_function=self.config.hash_function,
+                conv=c, hash_function=self.config.hash_function,
             )
-            self._append(new_eff, eff_table, [c.hkey(), c.load_date()])
+            self._append(new_eff, eff_table)
 
         def load_satellite(sat_name: str, attrs: Sequence[str]) -> None:
             sat_table = c.sat_name(sat_name)
             new_sat = rv.satellite_rows(
                 staged, attrs, existing=self._raw(sat_table),
-                conv=c, config=self.config, hash_function=self.config.hash_function,
+                conv=c, hash_function=self.config.hash_function,
             )
-            self._append(new_sat, sat_table, [c.hkey(), c.load_date()])
+            self._append(new_sat, sat_table)
 
         _run_concurrently(
             staged.sparkSession,
@@ -298,12 +287,12 @@ class RawVault:
             existing_link=self._raw(link_table),
             existing_effectivity=self._raw(eff_table),
             load_ts=load_ts, record_source=self.config.record_source,
-            conv=c, config=self.config, hash_function=self.config.hash_function,
+            conv=c, hash_function=self.config.hash_function,
             cache_registry=caches,
         )
         try:
-            self._append(new_links, link_table, [c.hkey()])
-            self._append(new_eff, eff_table, [c.hkey(), c.load_date()])
+            self._append(new_links, link_table)
+            self._append(new_eff, eff_table)
         finally:
             # release the kernel's internal cache — a streaming foreachBatch
             # session drives one load per micro-batch, and unreleased caches
@@ -336,12 +325,12 @@ class RawVault:
             existing_link=self._raw(link_table),
             existing_effectivity=self._raw(eff_table),
             load_ts=load_ts, record_source=self.config.record_source,
-            conv=c, config=self.config, hash_function=self.config.hash_function,
+            conv=c, hash_function=self.config.hash_function,
             resolutions=resolutions,
         )
         _run_concurrently(staged.sparkSession, [
-            partial(self._append, new_links, link_table, [c.hkey()]),
-            partial(self._append, new_eff, eff_table, [c.hkey(), c.load_date()]),
+            partial(self._append, new_links, link_table),
+            partial(self._append, new_eff, eff_table),
         ])
 
     def create_point_in_time_table_for_single_satellite(
@@ -354,17 +343,10 @@ class RawVault:
 
         c = self.conv
         sat = self._raw(c.sat_name(satellite_name))
-        eff_table = c.effectivity_sat_name(satellite_name)
-        eff = (
-            self._raw(eff_table)
-            if self.spark.catalog.tableExists(f"{self.config.raw_database}.{eff_table}")
-            else None
-        )
+        eff = _effectivity_or_none(self.spark, self.config, c, satellite_name)
         table = c.pit_name(pit_name)
         pit = bv.pit_rows(sat, eff, conv=c)
-        catalog.write_table(
-            pit, self.config.raw_database, table, mode="overwrite", config=self.config
-        )
+        catalog.write_table(pit, self.config.raw_database, table, mode="overwrite")
         self.spark.catalog.refreshTable(f"{self.config.raw_database}.{table}")
         return table
 
@@ -372,9 +354,11 @@ class RawVault:
         self, pit_name: str, satellite_name: str, touched_hkeys
     ) -> str:
         """Incremental PIT refresh for one batch's touched hkeys
-        (business_vault.pit_rows_incremental): O(batch) instead of the
-        reference's full-table rewrite. ``touched_hkeys`` is any 1-column
-        DataFrame of hkeys (e.g. ``staged.select(conv.hkey()).distinct()``)."""
+        (business_vault.pit_rows_incremental): the interval recompute is
+        O(batch) instead of the reference's full-table recompute, though the
+        PIT table is still rewritten in full. ``touched_hkeys`` is any
+        1-column DataFrame of hkeys (e.g.
+        ``staged.select(conv.hkey()).distinct()``)."""
         from pyspark_playground_spark.operators import business_vault as bv
 
         c = self.conv
@@ -385,18 +369,11 @@ class RawVault:
                 pit_name, satellite_name
             )
         sat = self._raw(c.sat_name(satellite_name))
-        eff_table = c.effectivity_sat_name(satellite_name)
-        eff = (
-            self._raw(eff_table)
-            if self.spark.catalog.tableExists(f"{self.config.raw_database}.{eff_table}")
-            else None
-        )
+        eff = _effectivity_or_none(self.spark, self.config, c, satellite_name)
         new_pit = bv.pit_rows_incremental(
             self._raw(table), sat, eff, touched_hkeys, conv=c
         ).localCheckpoint(eager=True)
-        catalog.write_table(
-            new_pit, self.config.raw_database, table, mode="overwrite", config=self.config
-        )
+        catalog.write_table(new_pit, self.config.raw_database, table, mode="overwrite")
         self.spark.catalog.refreshTable(full_name)
         return table
 
@@ -410,9 +387,7 @@ class RawVault:
         ref = self._raw(self.conv.ref_name(ref_name))
         active = bv.active_code_reference_rows(ref, conv=self.conv)
         table = self.conv.ref_name(active_name)
-        catalog.write_table(
-            active, self.config.raw_database, table, mode="overwrite", config=self.config
-        )
+        catalog.write_table(active, self.config.raw_database, table, mode="overwrite")
         self.spark.catalog.refreshTable(f"{self.config.raw_database}.{table}")
         return table
 
@@ -423,9 +398,9 @@ class RawVault:
         table = c.ref_name(name)
         new_refs = rv.reference_rows(
             staged, id_column, attributes, existing=self._raw(table),
-            conv=c, config=self.config, hash_function=self.config.hash_function,
+            conv=c, hash_function=self.config.hash_function,
         )
-        self._append(new_refs, table, [])
+        self._append(new_refs, table)
 
     def load_code_references(
         self, staged: DataFrame, name: str, group: str, id_column: str, attributes: Sequence[str]
@@ -434,9 +409,9 @@ class RawVault:
         table = c.ref_name(name)
         new_refs = rv.code_reference_rows(
             staged, group, id_column, attributes, existing=self._raw(table),
-            conv=c, config=self.config, hash_function=self.config.hash_function,
+            conv=c, hash_function=self.config.hash_function,
         )
-        self._append(new_refs, table, [])
+        self._append(new_refs, table)
 
     # ---- staged-table / multi-table convenience variants ------------------
     def _staged(self, staging_table_name: str) -> DataFrame:
@@ -605,14 +580,14 @@ class RawVault:
         parts = [
             rv.reference_rows(
                 self._staged(t), id_column, attributes, existing=existing,
-                conv=c, config=self.config, hash_function=self.config.hash_function,
+                conv=c, hash_function=self.config.hash_function,
             )
             for t in staging_table_names
         ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        self._append(out, table, [])
+        self._append(out, table)
 
     def load_code_references_from_table(
         self, staging_table_name: str, name: str, id_column: str, attributes: Sequence[str]
@@ -646,14 +621,14 @@ class RawVault:
             rv.code_reference_rows(
                 self._staged(t), t.lower(), id_column, attributes,
                 existing=existing,
-                conv=c, config=self.config, hash_function=self.config.hash_function,
+                conv=c, hash_function=self.config.hash_function,
             )
             for t in staging_table_names
         ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        self._append(out, table, [])
+        self._append(out, table)
 
 
 class BusinessVault:
@@ -706,16 +681,10 @@ class BusinessVault:
         from pyspark_playground_spark.operators import business_vault as bv
 
         c = self.conv
-        eff_table = c.effectivity_sat_name(name)
-        eff = (
-            self._raw(eff_table)
-            if self.spark.catalog.tableExists(f"{self.config.raw_database}.{eff_table}")
-            else None
-        )
         return bv.read_data_from_hub(
             self._raw(c.hub_name(name)),
             self._raw(c.sat_name(name)),
-            eff,
+            _effectivity_or_none(self.spark, self.config, c, name),
             list(attributes),
             include_hkey=include_hkey,
             conv=c,
@@ -800,8 +769,6 @@ class Curated:
             view, list(fields), active_code_ref=acr, users=users, conv=self.conv
         )
         table = target_table or entity
-        catalog.write_table(
-            out, self.config.curated_database, table, mode="overwrite", config=self.config
-        )
+        catalog.write_table(out, self.config.curated_database, table, mode="overwrite")
         self.spark.catalog.refreshTable(f"{self.config.curated_database}.{table}")
         return self.spark.table(f"{self.config.curated_database}.{table}")

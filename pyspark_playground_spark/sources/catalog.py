@@ -4,14 +4,20 @@ Reference parity:
 - create database (RawVault.py:187-192)
 - idempotent DDL from a declared schema (RawVault.py:1045-1055: empty DF +
   ``mode='ignore'`` saveAsTable)
-- append/overwrite writes, optionally bucketed on the join keys
-  (RawVault.py:1057-1075) — bucketing makes the per-batch anti-joins and the
-  PIT/satellite joins shuffle-free on the table side, which is the layout
-  that matters at 100 TB.
+- append/overwrite writes (RawVault.py:1057-1075)
+
+Every vault table is unbucketed parquet: the reference's fixed 5-bucket
+layout (``bucketBy`` on every write, SURVEY.md S7/X3) is deliberately not
+ported (SURVEY.md:392-395). It saves the table side's shuffle only when
+``spark.sql.shuffle.partitions`` is below the bucket count: an anti-join of
+a fresh frame against a 5-bucket table (AQE on, broadcast off) plans 2
+exchanges at 4 shuffle partitions, but at 8 or 200 both sides are shuffled
+anyway. The matching ``repartition(5, keys)`` before each anti-join capped
+every append at 5 tasks at any scale. Spark and AQE choose the
+partitioning instead, as for every other operator.
 
 Delta Lake is not available in this environment, so tables are
-parquet-format managed tables in the session (Derby) metastore; the writer
-API is format-agnostic (``VaultConfig.table_format``).
+parquet-format managed tables in the session (Derby) metastore.
 """
 
 from __future__ import annotations
@@ -20,16 +26,11 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pyspark_playground_spark.conventions import (
-    ColumnDefinition,
-    VaultConfig,
-    to_struct_type,
-)
+from pyspark_playground_spark.conventions import ColumnDefinition, to_struct_type
 
 
-def create_database(spark: SparkSession, name: str, location: str | None = None) -> None:
-    loc = f" LOCATION '{location}'" if location else ""
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {name}{loc}")
+def create_database(spark: SparkSession, name: str) -> None:
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {name}")
 
 
 def create_table(
@@ -37,59 +38,23 @@ def create_table(
     database: str,
     name: str,
     columns: Sequence[ColumnDefinition],
-    *,
-    config: VaultConfig | None = None,
-    bucket_columns: Sequence[str] | None = None,
 ) -> None:
     """Create-if-not-exists from a declared schema (RawVault.py:1045-1055).
 
     Pure catalog DDL (``CREATE TABLE IF NOT EXISTS``): no empty-DataFrame
     write job, no files — a wide catalog (the reference's production
     driver creates ~130 vault tables) is metadata-only work, on a real
-    cluster as in tests. Bucketing renders as ``CLUSTERED BY ... SORTED
-    BY ... INTO n BUCKETS``, the DDL equivalent of the writer-side
-    ``bucketBy``.
+    cluster as in tests.
     """
-    config = config or VaultConfig()
     schema = to_struct_type(list(columns))
     cols_ddl = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
     )
-    buckets = ""
-    if bucket_columns and config.optimize_partitioning:
-        bcols = ", ".join(f"`{c}`" for c in bucket_columns)
-        buckets = (
-            f" CLUSTERED BY ({bcols}) SORTED BY ({bcols})"
-            f" INTO {config.partition_size} BUCKETS"
-        )
     spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {database}.`{name}` ({cols_ddl})"
-        f" USING {config.table_format}{buckets}"
+        f"CREATE TABLE IF NOT EXISTS {database}.`{name}` ({cols_ddl}) USING parquet"
     )
 
 
-def write_table(
-    df: DataFrame,
-    database: str,
-    name: str,
-    *,
-    mode: str = "append",
-    config: VaultConfig | None = None,
-    bucket_columns: Sequence[str] | None = None,
-) -> None:
-    """Append/overwrite sink, bucketed when configured (RawVault.py:1057-1075)."""
-    config = config or VaultConfig()
-    writer = df.write.format(config.table_format).mode(mode)
-    if bucket_columns and config.optimize_partitioning:
-        writer = writer.bucketBy(config.partition_size, *bucket_columns).sortBy(
-            *bucket_columns
-        )
-    writer.saveAsTable(f"{database}.{name}")
-
-
-def read_table(spark: SparkSession, database: str, name: str) -> DataFrame:
-    return spark.table(f"{database}.{name}")
-
-
-def table_exists(spark: SparkSession, database: str, name: str) -> bool:
-    return spark.catalog.tableExists(f"{database}.{name}")
+def write_table(df: DataFrame, database: str, name: str, *, mode: str = "append") -> None:
+    """Append/overwrite sink (RawVault.py:1057-1075)."""
+    df.write.format("parquet").mode(mode).saveAsTable(f"{database}.{name}")

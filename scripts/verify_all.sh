@@ -8,6 +8,8 @@ echo "== pytest =="
 python -m pytest tests/ -q
 echo "== benchmark harness self-tests =="
 python3 -m pytest vaultbench -q
+echo "== heavy vault examples (tier-1 skips them) =="
+python -m pytest -m heavy tests/test_examples_2.py -k "vault_to_corpus or incremental_ingest" -q
 echo "== oracle result-type lint (sf0.001, DuckDB-only) =="
 python scripts/check_oracle.py --lint-types /root/testdata/sf0.001
 echo "== oracle gate (sf0.01) =="

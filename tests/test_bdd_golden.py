@@ -190,7 +190,6 @@ def vault(spark):
             staging_prepared_database="bdd_stg",
             raw_database="bdd_raw",
             record_source="imdb",
-            optimize_partitioning=False,
         ),
     )
     dv.create_tables()

@@ -63,10 +63,14 @@ def _run_wide_catalog(spark, n_entities: int, n_links: int, prefix: str):
         spark, schema, mapping,
         VaultConfig(staging_prepared_database=f"{prefix}_stg",
                     raw_database=f"{prefix}_raw",
-                    record_source="wide", optimize_partitioning=False),
+                    record_source="wide"),
     )
     created = dv.create_tables()
     assert len(created) == n_entities * 2 + n_links
+    # one physical layout: vault tables are created unbucketed
+    for table in created:
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {prefix}_raw.{table}").collect()
+        assert "Num Buckets" not in {r["col_name"] for r in rows}, table
 
     t0 = datetime(2026, 6, 1)
     batch = {}

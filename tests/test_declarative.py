@@ -126,7 +126,6 @@ def dv(spark):
         staging_prepared_database="decl_staging",
         raw_database="decl_raw",
         record_source="imdb",
-        optimize_partitioning=False,
     )
     schema = SourceSchema.from_json(SCHEMA_JSON)
     mapping = VaultMapping.from_yaml(MAPPING_YAML)

@@ -41,6 +41,7 @@ _HEAVY = pytest.mark.heavy
         "examples.quality_classifier_pipeline",
         "examples.declarative_corpus_pipeline",
         "examples.release_gate_pipeline",
+        "examples.end_to_end_pipeline",
     ],
 )
 def test_example_pipeline_runs(spark, sf_dir, module, capsys):

@@ -186,9 +186,6 @@ def vault(spark):
         staging_prepared_database="golden_staging",
         raw_database="golden_raw",
         record_source="imdb",
-        # small fixture: skip the fixed-bucket layout so each append stays a
-        # single local job; catalog-layout behavior is covered elsewhere
-        optimize_partitioning=False,
     )
     v = RawVault(spark, config)
     spark.sql("DROP DATABASE IF EXISTS golden_staging CASCADE")

@@ -105,6 +105,16 @@ def test_hub_rows_null_bkey_collision_keeps_one_row_per_hkey(spark):
     )
 
 
+def _assert_no_fixed_layout(frame):
+    """One layout for every append: no repartition before the anti-join and
+    no exchange with the reference's fixed 5 partitions (the suite runs at
+    4 shuffle partitions)."""
+    qe = frame._jdf.queryExecution()
+    assert "RepartitionByExpression" not in qe.analyzed().toString()
+    plan = qe.executedPlan().toString()
+    assert not re.search(r"hashpartitioning\([^()]*, 5\)", plan), plan
+
+
 def _hub_frame_from_kernel(df, monkeypatch):
     # no hkey_columns: hub_rows computes the hkey from the business keys
     staged = rv.prepare_staging(
@@ -135,7 +145,7 @@ def _hub_frame_from_load_hub(df, monkeypatch):
     appended = {}
     monkeypatch.setattr(
         RawVault, "_append",
-        lambda self, frame, table, bucket_columns: appended.__setitem__(table, frame),
+        lambda self, frame, table: appended.__setitem__(table, frame),
     )
     staged = rv.prepare_staging(
         df,
@@ -169,6 +179,7 @@ def test_hub_rows_injective_bkey_keeps_hash_aggregate_plan(spark, monkeypatch, h
     assert "SortAggregate" not in plan, plan
     # first() only over the business key, never over the batch constants
     assert all(a.startswith("ck#") for a in re.findall(r"first\(([^,)]*)", plan)), plan
+    _assert_no_fixed_layout(hub)
 
 
 def test_hub_hkey_is_md5_of_business_key(spark):
@@ -318,9 +329,9 @@ def test_declarative_multilink_plan_has_no_forced_broadcast(spark, sf_dir, monke
     appended = {}
     append = RawVault._append
 
-    def capture(self, frame, table, bucket_columns):
+    def capture(self, frame, table):
         appended[table] = frame
-        append(self, frame, table, bucket_columns)
+        append(self, frame, table)
 
     monkeypatch.setattr(RawVault, "_append", capture)
     dv.load_batch(batch, load_ts=T1)
@@ -331,6 +342,7 @@ def test_declarative_multilink_plan_has_no_forced_broadcast(spark, sf_dir, monke
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert plan.count("SortAggregate") == 2 * len(hubs), plan
+    _assert_no_fixed_layout(link)
     assert spark.table("rvk_plan_raw.LNK__LINEITEM").count() == (
         batch["lineitem"].select(*fks.values()).distinct().count()
     )

@@ -99,7 +99,6 @@ def test_xxhash64_vault_end_to_end(spark):
         raw_database="xx_raw",
         record_source="x",
         hash_function="xxhash64",
-        optimize_partitioning=False,
     )
     v = RawVault(spark, config)
     v.initialize_database()
@@ -189,42 +188,6 @@ def test_partitioned_write_prunes_partitions(spark, tmpdir):
     pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
     assert "shard" in pf, plan
     assert back.count() == 25
-
-
-def test_bucketed_tables_join_without_shuffle(spark):
-    """X3 pinned: two tables bucketed+sorted on the join key join with
-    ZERO exchanges — the co-located join that makes per-batch anti-joins
-    and hub⋈sat reads shuffle-free on the table side at 100 TB."""
-    import re
-    from pyspark.sql import functions as F
-    from pyspark_playground_spark.conventions import VaultConfig
-    from pyspark_playground_spark.sources import catalog as cat
-
-    spark.sql("CREATE DATABASE IF NOT EXISTS bj_db")
-    cfg = VaultConfig(optimize_partitioning=True)
-    a = spark.range(1000).select(F.col("id").alias("k"), F.lit("a").alias("va"))
-    b = spark.range(500).select(F.col("id").alias("k"), F.lit("b").alias("vb"))
-    cat.write_table(a, "bj_db", "bj_a", mode="overwrite",
-                    config=cfg, bucket_columns=["k"])
-    cat.write_table(b, "bj_db", "bj_b", mode="overwrite",
-                    config=cfg, bucket_columns=["k"])
-    try:
-        # disable auto-broadcast so the join would otherwise shuffle
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = cat.read_table(spark, "bj_db", "bj_a").join(
-            cat.read_table(spark, "bj_db", "bj_b"), "k"
-        )
-        plan = j._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        assert len(re.findall(r"\(\d+\) Exchange", plan)) == 0, plan
-        assert "SortMergeJoin" in plan, plan
-        assert j.count() == 500
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP DATABASE bj_db CASCADE")
 
 
 def test_quarantine_read_splits_clean_and_corrupt(spark, tmp_path):

@@ -32,7 +32,6 @@ def raw(spark):
         staging_prepared_database="stw_stg",
         raw_database="stw_raw",
         record_source="stw",
-        optimize_partitioning=False,
     )
     # source parquet files, reference layout: {base}/{table}.parquet
     movies = spark.createDataFrame(
@@ -185,7 +184,7 @@ def test_multi_table_reference_loads_write_nothing_for_empty_list(
     )
     appended = []
     monkeypatch.setattr(
-        RawVault, "_append", lambda self, df, table, bucket_columns: appended.append(table)
+        RawVault, "_append", lambda self, df, table: appended.append(table)
     )
     getattr(raw, load)([], name, "ID", ["NAME"])
     assert appended == []

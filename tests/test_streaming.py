@@ -69,7 +69,6 @@ def test_streaming_cdc_matches_batch_loading(spark, tmpdir):
             staging_prepared_database="stream_stg",
             raw_database="stream_raw",
             record_source="stream",
-            optimize_partitioning=False,
         ),
     )
     dv.create_tables()

@@ -38,7 +38,6 @@ def vaults(spark):
         raw_database="bvc_raw",
         curated_database="bvc_cur",
         record_source="crm",
-        optimize_partitioning=False,
     )
     raw = RawVault(spark, config)
     raw.initialize_database()
