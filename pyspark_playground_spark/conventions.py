@@ -86,12 +86,6 @@ class DataVaultConventions:
     def group(self) -> str:
         return self.column_prefix + "GROUP"
 
-    def valid_from(self) -> str:
-        return self.column_prefix + "VALID_FROM"
-
-    def valid_to(self) -> str:
-        return self.column_prefix + "VALID_TO"
-
     def hkey_of(self, name: str) -> str:
         """Foreign-hkey column inside a link, e.g. ``$__HKEY_MOVIES``."""
         return f"{self.column_prefix}HKEY_{self.strip_source_prefix(name).upper()}"
@@ -128,10 +122,6 @@ class DataVaultConventions:
 
     def is_vault_column(self, col: str) -> bool:
         return col.startswith(self.column_prefix)
-
-    def payload_columns(self, columns: list[str]) -> list[str]:
-        """Non-system columns of a vault table."""
-        return [c for c in columns if not self.is_vault_column(c)]
 
 
 @dataclass(frozen=True)

@@ -164,31 +164,6 @@ def _materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
-def _perm_hash(i: int):
-    # must be a unary lambda factory: a 2-arg lambda passed to F.transform
-    # would be bound as (element, index) and silently shadow the perm seed
-    return lambda s: F.xxhash64(F.lit(i), s)
-
-
-def minhash_signature_expr(shingles: Column, num_perms: int = 64) -> Column:
-    """MinHash signature as a single per-row expression: for permutation i,
-    min over shingles of xxhash64(i, shingle).
-
-    Prefer ``minhash_signatures`` below: when ``shingles`` is itself an
-    expression, Catalyst's projection collapse inlines it into all
-    ``num_perms`` branches — the document is re-tokenized/re-shingled 64×
-    per row and the codegen unit bloats (measured 15-30× slower than the
-    aggregation formulation). Kept for cases where the shingle array is
-    already materialized (e.g. read from a column).
-    """
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, _perm_hash(i)))
-            for i in range(num_perms)
-        ]
-    )
-
-
 def _minhash_agg(
     df: DataFrame,
     id_column: str,
@@ -235,9 +210,8 @@ def minhash_signatures(
     shingle_size: int = 3,
 ) -> DataFrame:
     """MinHash signatures as one array column — the persistable form
-    (write this to parquet and feed ``lsh_candidate_pairs`` /
-    ``incremental_minhash_pairs`` later). See ``_minhash_agg`` for the
-    scale shape."""
+    (write this to parquet and feed ``incremental_minhash_pairs``
+    later). See ``_minhash_agg`` for the scale shape."""
     return _minhash_agg(df, id_column, text_column, num_perms, shingle_size).select(
         F.col(id_column),
         F.array(*[F.col(f"__h{i}") for i in range(num_perms)]).alias("minhash"),
@@ -364,37 +338,6 @@ def minhash_banded_store_metadata(
     return spark.createDataFrame(
         [(int(num_perms), int(bands))], "num_perms INT, bands INT"
     )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_column: str = "doc_id",
-    *,
-    num_perms: int = 64,
-    bands: int = 16,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Band pre-computed signatures and emit candidate pairs sharing ≥1 band
-    bucket.
-
-    Shuffle profile: one explode+groupBy on (band, band_hash) — the classic
-    LSH join. Output is distinct (id_a < id_b) pairs. ``checkpoint_dir``
-    switches the signature materialization from executor-local to a
-    reliable checkpoint (see ``_materialize``) for cluster runs.
-
-    When starting from raw text prefer ``minhash_band_buckets`` (used by
-    ``minhash_dedup_pairs``), which fuses banding into the signature
-    aggregation; this entry point serves signature columns that are already
-    materialized (e.g. persisted from a prior run).
-    """
-    # signatures are small (num_perms longs per doc) but expensive to derive;
-    # materialize once so the a/b sides of the self-join below don't each
-    # recompute the shingle+hash pipeline
-    signatures = _materialize(signatures, checkpoint_dir)
-    banded = minhash_banded_store(
-        signatures, id_column, num_perms=num_perms, bands=bands
-    )
-    return _pairs_from_banded(banded, id_column)
 
 
 def minhash_dedup_pairs(

@@ -6,7 +6,8 @@ filter columns makes min/max footer stats selective on EVERY interleaved
 dimension at once, so a parquet reader prunes row groups for predicates
 on any of them (a plain sort only prunes its leading column). This is
 the same layout trick Delta's OPTIMIZE ZORDER BY applies; here it is an
-engine-agnostic expression + repartitionByRange, usable with any sink.
+engine-agnostic key expression: range-partition and sort by it before
+writing to any sink.
 
 Each column is scaled to a ``bits``-wide range with its min/max via
 ``floor((x - mn) * (2^bits - 1) / span)`` and the bits interleaved with
@@ -74,22 +75,6 @@ def with_zorder_key(
     )
     drop = [f"__mn_{c}" for c in columns] + [f"__mx_{c}" for c in columns]
     return out.withColumn(key_column, key).drop(*drop)
-
-
-def zorder_repartition(
-    df: DataFrame,
-    columns: Sequence[str],
-    *,
-    num_partitions: int | None = None,
-    bits: int = 16,
-) -> DataFrame:
-    """Range-repartition by the Z-order key (then drop it): rows that are
-    close in every interleaved dimension land in the same output file, so
-    footer min/max stats prune on each dimension. Write the result with
-    any sink; one extra range shuffle is the whole cost."""
-    keyed = with_zorder_key(df, columns, bits=bits)
-    parts = [num_partitions] if num_partitions else []
-    return keyed.repartitionByRange(*parts, "zkey").sortWithinPartitions("zkey").drop("zkey")
 
 
 def plan_shards(

@@ -1,16 +1,15 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Beyond-reference surface (BASELINE.json north star). Media payloads ride as
-``binary`` columns with a typed metadata struct; decode / feature-extract /
-resize / frame-sample run as Arrow-batched ``mapInPandas`` operators so the
-Spark-side plumbing (schema, partition sizing, batch shape) is real and
-tested even though the actual codecs are stubbed in this environment
-(image/audio libraries are not installed — see ``decode_image``).
+``binary`` columns with a typed metadata struct; decode and feature-extract
+run as Arrow-batched ``mapInPandas`` operators so the Spark-side plumbing
+(schema, batch shape) is real and tested even though the actual codecs are
+stubbed in this environment (image/audio libraries are not installed — see
+``decode_image``).
 
-Scale notes: binary payloads dominate row size, so operators here
-repartition by byte budget, not row count (``target_partition_bytes``), and
-metadata-only transforms never touch the payload column (column pruning
-keeps the binary out of the scan).
+Scale notes: binary payloads dominate row size, so metadata-only transforms
+(resize planning, frame planning) never touch the payload column (column
+pruning keeps the binary out of the scan).
 """
 
 from __future__ import annotations
@@ -21,15 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("checksum", T.StringType(), False),
-    ]
-)
-
 
 def attach_media_column(
     df: DataFrame, source_column: str, *, media_type: str = "image/fake"
@@ -48,26 +38,6 @@ def attach_media_column(
             F.md5(content).alias("checksum"),
         ),
     )
-
-
-def repartition_by_bytes(
-    df: DataFrame, *, total_bytes_column: str = "media_meta.n_bytes",
-    target_partition_bytes: int = 128 * 1024 * 1024, estimated_total_bytes: int | None = None,
-) -> DataFrame:
-    """Partition-size binary data by byte budget instead of row count.
-
-    Without ``estimated_total_bytes`` this runs one scalar aggregation
-    (a driver-side ``first()`` on a 1-row result — O(1) data, but a full
-    scan and an extra job). Hot paths should pass the estimate (from file
-    footers, table stats, or the previous batch) to keep the plan
-    single-job.
-    """
-    if estimated_total_bytes is None:
-        estimated_total_bytes = df.select(
-            F.sum(F.col(total_bytes_column))
-        ).first()[0] or 0
-    parts = max(1, int(estimated_total_bytes // target_partition_bytes) + 1)
-    return df.repartition(parts)
 
 
 def decode_image(df: DataFrame, *, content_column: str = "content") -> DataFrame:
@@ -116,19 +86,6 @@ def fake_decode_image(df: DataFrame, *, content_column: str = "content") -> Data
             yield out
 
     return df.mapInPandas(_decode, schema=schema)
-
-
-def sample_frames(
-    df: DataFrame, *, every_n_bytes: int = 1024, content_column: str = "content"
-) -> DataFrame:
-    """Frame-sampling plumbing for video payloads: emits one row per sampled
-    "frame" offset (explode pattern). Offsets are computed JVM-side; the
-    per-frame decode would plug in as a mapInPandas over the exploded rows."""
-    n_frames = (F.length(F.col(content_column)) / every_n_bytes).cast("int") + 1
-    return df.withColumn(
-        "frame_offset",
-        F.explode(F.sequence(F.lit(0), n_frames - 1) ),
-    ).withColumn("frame_byte_start", F.col("frame_offset") * every_n_bytes)
 
 
 def resize_image_meta(
@@ -185,59 +142,6 @@ def fake_extract_audio_features(
     return df.mapInPandas(_extract, schema=schema)
 
 
-def fake_decode_image_arrow(
-    df: DataFrame, *, content_column: str = "content"
-) -> DataFrame:
-    """:func:`fake_decode_image`'s ``mapInArrow`` twin — the most
-    efficient Python lane for byte-heavy columns: ``mapInPandas``
-    materializes every binary payload as a Python ``bytes`` object
-    inside a pandas column (one heap copy per row); ``mapInArrow``
-    hands the RecordBatch over zero-copy, and the length census below
-    reads the Arrow offsets buffer without ever touching the payload
-    bytes. Identical output contract (parity-pinned in tests); a real
-    decoder that accepts Arrow buffers (most image codecs do) would
-    plug into this lane at 100 TB.
-    """
-    import pyarrow as pa
-
-    out_fields = [f for f in df.schema.fields if f.name != content_column]
-    schema = T.StructType(
-        out_fields
-        + [
-            T.StructField("width", T.IntegerType(), False),
-            T.StructField("height", T.IntegerType(), False),
-            T.StructField("mode", T.StringType(), False),
-        ]
-    )
-
-    def _decode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            content = batch.column(batch.schema.get_field_index(content_column))
-            # value lengths straight from the offsets buffer — the payload
-            # bytes are never copied into Python objects
-            lengths = pa.compute.binary_length(content)
-            # the lengths array is 4 bytes/row — numpy-ing IT is free;
-            # the payload buffer itself is never converted
-            ln = lengths.to_numpy(zero_copy_only=False)
-            width = pa.array((ln % 640 + 1).astype("int32"))
-            height = pa.array((ln % 480 + 1).astype("int32"))
-            mode = pa.array(
-                ["RGB" if v % 2 == 0 else "L" for v in ln]
-            )
-            keep = [
-                batch.column(i)
-                for i, f in enumerate(batch.schema)
-                if f.name != content_column
-            ]
-            names = [f.name for f in batch.schema if f.name != content_column]
-            yield pa.RecordBatch.from_arrays(
-                keep + [width, height, mode],
-                names=names + ["width", "height", "mode"],
-            )
-
-    return df.mapInArrow(_decode, schema=schema)
-
-
 def uniform_frame_plan(
     df: DataFrame,
     *,
@@ -253,7 +157,7 @@ def uniform_frame_plan(
     math (duration × fps), JVM-side, one projection + explode: a 100 TB
     video catalog scan plans every decode without touching a byte of
     payload; the per-frame decode plugs in as ``mapInPandas`` over the
-    exploded rows exactly like :func:`sample_frames`' byte variant.
+    exploded rows.
 
     Clips shorter than one frame (total_frames == 0) plan nothing.
     ``frame_ms`` is the frame's integer millisecond timestamp

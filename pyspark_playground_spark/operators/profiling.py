@@ -96,46 +96,6 @@ def equi_width_histogram(
     )
 
 
-def approx_column_profile(
-    df: DataFrame, columns: Sequence[str] | None = None, *, rsd: float = 0.05
-) -> DataFrame:
-    """Sketch-based sibling of ``column_profile`` for petabyte quick-looks:
-    HyperLogLog++ ``approx_count_distinct`` (relative std dev ``rsd``)
-    instead of exact distincts, same long-format output.
-
-    The exact multi-``count(DISTINCT)`` plan expands the input once per
-    profiled column before the shuffle; the sketch plan is one ordinary
-    aggregation pass with O(1/rsd^2) state per column — at 100 TB that is
-    the difference between a coffee and an afternoon. Not oracle-checkable
-    across engines (sketch internals differ); error bounds are pinned by
-    tests instead.
-    """
-    cols = list(columns or df.columns)
-    aggs: list = [F.count(F.lit(1)).alias("__rows")]
-    for c in cols:
-        aggs += [
-            F.count(F.col(c)).alias(f"__nn_{c}"),
-            F.approx_count_distinct(F.col(c), rsd=rsd).alias(f"__nd_{c}"),
-            F.min(F.col(c)).cast("string").alias(f"__mn_{c}"),
-            F.max(F.col(c)).cast("string").alias(f"__mx_{c}"),
-        ]
-    wide = df.agg(*aggs)
-    per_col = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column_name"),
-                F.col("__rows").alias("n_rows"),
-                F.col(f"__nn_{c}").alias("n_non_null"),
-                F.col(f"__nd_{c}").alias("n_distinct_approx"),
-                F.col(f"__mn_{c}").alias("min_s"),
-                F.col(f"__mx_{c}").alias("max_s"),
-            )
-            for c in cols
-        ]
-    )
-    return wide.select(F.explode(per_col).alias("p")).select("p.*")
-
-
 def approx_profile_check(
     df: DataFrame,
     columns: Sequence[str] | None = None,

@@ -214,8 +214,8 @@ def observed_write(
     metric name → aggregate Column (count/sum/avg/...). ``gates`` maps a
     metric name → inclusive ``(lo, hi)`` bounds checked AFTER the write;
     a violated gate raises ``ValueError`` listing every violation — the
-    caller decides whether the written output is published (pair with
-    ``sources.files.write_atomic`` to stage-then-swap only on pass).
+    caller decides whether the written output is published (write to a
+    staging path and swap it in only on pass).
 
     Returns the observed metrics dict.
     """
@@ -252,8 +252,7 @@ def table_diff(
 
     ``compare_columns`` defaults to all shared non-key columns. One key
     shuffle (the full-outer join); counts are a map-side-combined
-    aggregate. Pair with ``observed_write``/``write_atomic`` for the
-    gate-then-swap flow.
+    aggregate. Pair with ``observed_write`` for the gate-then-swap flow.
 
     Duplicate keys do NOT fan out: each side is pre-aggregated per key to
     ``(row count, order-insensitive multiset fingerprint)`` before the

@@ -86,18 +86,9 @@ def _dim_guard(dim: int, *names: str) -> Column:
     return g
 
 
-def dot_expr_fixed(a: str, b: str, dim: int) -> Column:
-    """``dot_expr`` over named columns with a declared dimension: codegen'd
-    unrolled chain when ``size == dim``, generic fold otherwise."""
-    fast = F.expr(_unrolled_dot_sql(a, b, dim))
-    return F.when(_dim_guard(dim, a, b), fast).otherwise(
-        dot_expr(F.col(a), F.col(b))
-    )
-
-
 def cosine_expr_fixed(a: str, b: str, dim: int) -> Column:
     """``cosine_expr`` over named columns with a declared dimension (same
-    guarded-fallback contract as :func:`dot_expr_fixed`)."""
+    guarded-fallback contract as :func:`sqdist_expr_fixed`)."""
     fast = F.expr(
         f"({_unrolled_dot_sql(a, b, dim)}"
         f" / (SQRT({_unrolled_dot_sql(a, a, dim)})"
@@ -111,9 +102,10 @@ def cosine_expr_fixed(a: str, b: str, dim: int) -> Column:
 def sqdist_expr_fixed(
     a: str, b: str, dim: int, *, cast: bool = True
 ) -> Column:
-    """Squared-L2 fold over named columns with a declared dimension (same
-    guarded-fallback contract as :func:`dot_expr_fixed`). ``cast=False``
-    skips the per-element DOUBLE cast for columns already double-typed."""
+    """Squared-L2 fold over named columns with a declared dimension:
+    codegen'd unrolled chain when every ``size == dim``, the generic fold
+    otherwise. ``cast=False`` skips the per-element DOUBLE cast for
+    columns already double-typed."""
     fast = F.expr(_unrolled_sqdist_sql(a, b, dim, cast=cast))
     ac, bc = _as_double(F.col(a)), _as_double(F.col(b))
     fold = F.aggregate(
@@ -544,10 +536,7 @@ def gram_matrix_exact(
     EXACT in a double; products are rounded to ``product_decimals`` and
     summed in DECIMAL — order-independent, engine-stable (rendered as the
     decimal string). This is the ORACLE path: it explodes d²/2 product
-    rows per vector (d=64 → 2080×), which is the price of exactness. For
-    production scale use ``gram_matrix_fast`` (per-partition NumPy Gram,
-    ~d²/2 floats per PARTITION instead of per row) and accept float
-    summation order.
+    rows per vector (d=64 → 2080×), which is the price of exactness.
 
     Shuffle census: one groupBy on (i, j) — d²/2 keys, map-side combined.
     """
@@ -570,120 +559,6 @@ def gram_matrix_exact(
         F.count(F.lit(1)).alias("n_vectors"),
         F.sum("__p").alias("sxy"),
     )
-
-
-def gram_matrix_fast(
-    df: DataFrame,
-    *,
-    vector_column: str = "embedding",
-    dim: int,
-) -> DataFrame:
-    """Production Gram matrix: Arrow-batched per-partition ``Xᵀ X`` via
-    ``mapInPandas`` (one d×d float64 partial per batch — no row
-    amplification), then a single d²-row final sum. Float summation order
-    varies with partitioning, so results match ``gram_matrix_exact``
-    to ~1e-9 relative, not bit-for-bit — use the exact variant when the
-    output feeds a cross-engine comparison.
-    """
-    import pandas as pd
-
-    def partial(batches):
-        import numpy as np
-
-        acc = np.zeros((dim, dim), dtype="float64")
-        n = 0
-        for pdf in batches:
-            mat = np.asarray(pdf[vector_column].tolist(), dtype="float64")
-            if len(mat):
-                acc += mat.T @ mat
-                n += len(mat)
-        iu = [(i, j) for i in range(dim) for j in range(i, dim)]
-        yield pd.DataFrame(
-            {
-                "i": [i for i, _ in iu],
-                "j": [j for _, j in iu],
-                "n_vectors": n,
-                "sxy": [acc[i, j] for i, j in iu],
-            }
-        )
-
-    parts = df.select(vector_column).mapInPandas(
-        partial, schema="i int, j int, n_vectors long, sxy double"
-    )
-    return parts.groupBy("i", "j").agg(
-        F.sum("n_vectors").alias("n_vectors"), F.sum("sxy").alias("sxy")
-    )
-
-
-def pca_project(
-    df: DataFrame,
-    *,
-    k: int = 2,
-    vector_column: str = "embedding",
-    id_column: str = "vec_id",
-    dim: int | None = None,
-) -> DataFrame:
-    """PCA projection of an embedding column onto its top-``k`` principal
-    components — visualization / compaction / whitening front-end.
-
-    Scale shape: the ONLY driver-side data is the d×d Gram matrix and the
-    d-vector of sums (model-sized, not data-sized — same contract as the
-    IVF centroids): Gram via ``gram_matrix_fast`` (per-partition NumPy,
-    one d²-row shuffle), eigendecomposition of the d×d covariance on the
-    driver (O(d³), microseconds), components broadcast back into a
-    per-row ``aggregate`` dot product. Component signs are fixed by
-    making each eigenvector's largest-magnitude coordinate positive, so
-    output is deterministic up to float summation; there is no
-    cross-engine oracle (eigenvectors are not SQL-expressible) — the
-    variance-ordering and orthogonality properties are test-pinned.
-
-    Returns ``(id, pc0..pc{k-1})``.
-    """
-    import numpy as np
-
-    d = dim or df.select(
-        F.size(_as_double(F.col(vector_column))).alias("d")
-    ).first()["d"]
-    gram_rows = gram_matrix_fast(df, vector_column=vector_column, dim=d).collect()
-    n = gram_rows[0]["n_vectors"]
-    G = np.zeros((d, d))
-    for r in gram_rows:
-        G[r["i"], r["j"]] = G[r["j"], r["i"]] = r["sxy"]
-    sums = (
-        df.select(F.posexplode(_as_double(F.col(vector_column))).alias("i", "x"))
-        .groupBy("i")
-        .agg(F.sum("x").alias("s"))
-        .collect()
-    )
-    mu = np.zeros(d)
-    for r in sums:
-        mu[r["i"]] = r["s"] / n
-    cov = G / n - np.outer(mu, mu)
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][:k]
-    comps = vecs[:, order]  # d × k
-    # deterministic sign: largest-|coordinate| positive
-    for c in range(comps.shape[1]):
-        j = int(np.argmax(np.abs(comps[:, c])))
-        if comps[j, c] < 0:
-            comps[:, c] = -comps[:, c]
-
-    centered = F.zip_with(
-        _as_double(F.col(vector_column)),
-        F.lit(mu.tolist()),
-        lambda x, m: x - m,
-    )
-    out_cols = []
-    for c in range(k):
-        w = F.lit(comps[:, c].tolist())
-        out_cols.append(
-            F.aggregate(
-                F.zip_with(centered, w, lambda x, wc: x * wc),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias(f"pc{c}")
-        )
-    return df.select(F.col(id_column), *out_cols)
 
 
 def _assign_to_centroids(
@@ -1002,7 +877,7 @@ def mutual_nn_pairs(
     bitext mining pipelines; ties broken by neighbor id).
 
     ``candidates`` (optional) restricts scoring to a candidate-pair frame
-    ``(id_a, id_b)`` — pass :func:`lsh_candidate_pairs` output so the
+    ``(id_a, id_b)`` — pass :func:`embedding_near_dup_pairs` output so the
     scored set is bucket-bounded; that is the 100 TB path. The default
     scores all pairs exactly (the oracle-checkable baseline — same
     regime note as :func:`brute_force_topk`).
@@ -1169,9 +1044,9 @@ def hard_negative_mining(
 
     Default scores all pairs exactly (the oracle-checkable baseline;
     same regime note as :func:`brute_force_topk`); pass a candidate
-    pair frame ``(id_a, id_b)`` from :func:`lsh_candidate_pairs` /
-    :func:`embedding_near_dup_pairs` to bound scoring at 100 TB — the
-    label filter then applies to candidates only.
+    pair frame ``(id_a, id_b)`` from :func:`embedding_near_dup_pairs`
+    to bound scoring at 100 TB — the label filter then applies to
+    candidates only.
 
     Plan shape: score → filter label mismatch → per-anchor top-k via a
     key-partitioned row_number. Ties broken by neighbor id.

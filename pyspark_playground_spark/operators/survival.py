@@ -461,10 +461,12 @@ def cox_binary_hazard(
     on bit-identical β on every engine.
 
     Refuses (NULL estimates) when the information is non-positive at
-    any step — one group empty, no deaths, or complete separation.
+    any step — one group empty or complete separation. With no deaths
+    at all there is no death-time census to fit, and the output is
+    empty (the oracle's Newton recursion has no step to take).
 
-    Output one row: (n_a, n_b, deaths_a, deaths_b, beta_q6, hr_q6,
-    se_q6, z_q6).
+    Output one row, or none without deaths: (n_a, n_b, deaths_a,
+    deaths_b, beta_q6, hr_q6, se_q6, z_q6).
     """
     import math
 
@@ -598,8 +600,9 @@ def cox_binary_hazard(
     # driver-coordinated fits: every value above was computed by Spark
     # aggregates in THIS call; re-deriving them lazily in the returned
     # plan would re-scan the source once per downstream action
-    return spark.createDataFrame(
-        [
+    rows = []
+    if counts["deaths_a"] + counts["deaths_b"] > 0:
+        rows = [
             (
                 counts["n_a"],
                 counts["n_b"],
@@ -607,7 +610,9 @@ def cox_binary_hazard(
                 counts["deaths_b"],
                 *stats,
             )
-        ],
+        ]
+    return spark.createDataFrame(
+        rows,
         "n_a long, n_b long, deaths_a long, deaths_b long, "
         "beta_q6 long, hr_q6 long, se_q6 long, z_q6 long",
     )

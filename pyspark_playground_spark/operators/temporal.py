@@ -546,75 +546,6 @@ def concurrent_intervals(
     )
 
 
-def concurrency_deltas(
-    df: DataFrame,
-    start_us_column: str,
-    end_us_column: str,
-    *,
-    bucket_us: int = 3_600_000_000,
-) -> DataFrame:
-    """Mergeable form of the concurrency curve: net interval-boundary sum
-    per coarse time bucket. ``(bucket, net_delta, n_starts, n_ends)``
-    rows are associative+commutative under per-bucket addition — the
-    continuous-aggregate partial for ``concurrent_intervals``, maintained
-    incrementally by ``streaming/cdc.py concurrency_stream_loader``.
-
-    ``finalize_concurrency`` turns the merged partials into the number of
-    intervals open at each bucket's end; per-event resolution inside a
-    bucket is intentionally given up — that is the granularity/state
-    trade every continuous aggregate makes.
-    """
-    starts = df.select(
-        F.expr(f"CAST({start_us_column} AS BIGINT) DIV {bucket_us}")
-        .alias("bucket"),
-        F.lit(1).alias("delta"),
-    )
-    ends = df.select(
-        F.expr(f"CAST({end_us_column} AS BIGINT) DIV {bucket_us}")
-        .alias("bucket"),
-        F.lit(-1).alias("delta"),
-    )
-    return (
-        starts.unionByName(ends)
-        .groupBy("bucket")
-        .agg(
-            F.sum("delta").alias("net_delta"),
-            F.sum((F.col("delta") == 1).cast("long")).alias("n_starts"),
-            F.sum((F.col("delta") == -1).cast("long")).alias("n_ends"),
-        )
-    )
-
-
-def merge_concurrency_deltas(*parts: DataFrame) -> DataFrame:
-    """Merge per-batch partials (same schema) — one union + re-sum."""
-    if not parts:
-        raise ValueError("merge_concurrency_deltas needs at least one input")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.groupBy("bucket").agg(
-        F.sum("net_delta").alias("net_delta"),
-        F.sum("n_starts").alias("n_starts"),
-        F.sum("n_ends").alias("n_ends"),
-    )
-
-
-def finalize_concurrency(deltas: DataFrame) -> DataFrame:
-    """Open-interval count at each bucket's end: prefix sum of net deltas
-    in bucket order. The frame is one row per bucket — tiny by
-    construction — so the single-partition window is safe."""
-    w = (
-        Window.orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return deltas.select(
-        "bucket",
-        "n_starts",
-        "n_ends",
-        F.sum("net_delta").over(w).cast("long").alias("open_at_end"),
-    )
-
-
 def cusum_changepoint(
     df: DataFrame,
     *,

@@ -248,21 +248,6 @@ def normalize_text(
     )
 
 
-def url_stats(df: DataFrame, text_column: str = "text") -> DataFrame:
-    """Per-document URL census: count + sorted distinct domains (the
-    blocklist-join key for C4-style domain filtering)."""
-    col = F.col(text_column)
-    return df.select(
-        "*",
-        F.regexp_count(col, F.lit(URL_PATTERN)).alias("n_urls"),
-        F.array_sort(
-            F.array_distinct(
-                F.regexp_extract_all(col, F.lit(URL_DOMAIN_PATTERN), 1)
-            )
-        ).alias("url_domains"),
-    )
-
-
 def repetition_metrics(
     df: DataFrame, text_column: str = "text", *, ngram_n: int = 2
 ) -> DataFrame:

@@ -1393,10 +1393,11 @@ def bloom_decontamination_documents(spark, sf_dir):
     """,
 )
 def pii_scrub_documents(spark, sf_dir):
-    """C4/Pile-style redaction census (operators/text.py scrub_pii +
-    url_stats): mask emails/URLs, count them, list domains — the patterns
-    are engine-portable (Java regex == RE2 for these), so the scrub is
-    byte-identical across engines (checked via md5 of the masked text)."""
+    """C4/Pile-style redaction census (operators/text.py scrub_pii and
+    URL_DOMAIN_PATTERN): mask emails/URLs, count them, list domains — the
+    patterns are engine-portable (Java regex == RE2 for these), so the
+    scrub is byte-identical across engines (checked via md5 of the masked
+    text)."""
     docs = load(spark, sf_dir, "documents")
     scrubbed = tx.scrub_pii(docs)
     domains = F.array_join(
@@ -1826,8 +1827,8 @@ def dv_linked_customer_orders(spark, sf_dir):
     """,
 )
 def events_hourly_window(spark, sf_dir):
-    """Tumbling-window aggregation (streaming/cdc.py windowed_event_counts
-    batch twin): F.window + decimal-exact sums so both engines agree."""
+    """Tumbling-window aggregation: F.window + decimal-exact sums so both
+    engines agree."""
     events = load(spark, sf_dir, "events")
     win = F.window(F.col("ts"), "1 hour")
     return (
@@ -1869,7 +1870,7 @@ def events_hourly_window(spark, sf_dir):
     """,
 )
 def events_session_windows_30m(spark, sf_dir):
-    """Session windows (streaming/cdc.py session_windows batch twin): the
+    """Session windows (F.session_window, 30-minute gap): the
     oracle reproduces F.session_window's merge semantics with the classic
     gaps-and-islands lag/cumsum construction."""
     events = load(spark, sf_dir, "events")
@@ -2648,9 +2649,7 @@ def embedding_gram_matrix(spark, sf_dir):
     """Exact corpus Gram matrix (similarity.gram_matrix_exact): per (i,j)
     dimension pair, the sum of x_i·x_j — covariance/PCA/whitening input.
     float32 products are exact in doubles, rounded then summed in DECIMAL
-    (order-independent, rendered as the decimal string). The production
-    path is gram_matrix_fast (per-partition NumPy XᵀX, no row
-    amplification), parity-tested against this."""
+    (order-independent, rendered as the decimal string)."""
     emb = load(spark, sf_dir, "embeddings")
     out = sim.gram_matrix_exact(emb)
     return out.select(
@@ -3574,8 +3573,8 @@ def zorder_key_documents(spark, sf_dir):
     """Z-order (Morton) clustering key over (doc_id, n_chars)
     (operators/layout.py): 8 bits per dimension, bit i of column j at
     position 2i+j; the oracle recomputes the interleave with explicit
-    shift/mask arithmetic. Feeding zorder_repartition, this is the
-    multi-dimension file-pruning layout."""
+    shift/mask arithmetic. Range-partitioning and sorting by this key
+    gives the multi-dimension file-pruning layout."""
     docs = load(spark, sf_dir, "documents")
     return ly.with_zorder_key(
         docs.select("doc_id", "n_chars"), ["doc_id", "n_chars"], bits=8
@@ -11667,7 +11666,7 @@ def mutual_nn_pairs_embeddings(spark, sf_dir):
     """Reciprocal nearest neighbors (similarity.mutual_nn_pairs): pairs
     where each is the other's cosine top-1 — the high-precision
     alignment/dedup criterion. Exact baseline here (oracle-checkable);
-    the 100 TB path passes lsh_candidate_pairs as the candidate frame,
+    the 100 TB path passes an LSH candidate-pair frame as ``candidates``,
     pinned equal to the exact path in tests."""
     emb = load(spark, sf_dir, "embeddings")
     return sim.mutual_nn_pairs(emb)

@@ -26,12 +26,8 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from pyspark_playground_spark.conventions import DataVaultConventions
 from pyspark_playground_spark.operators.profiling import equal_width_bin
-
-CONV = DataVaultConventions()
 
 
 # ---------------------------------------------------------------------------
@@ -104,399 +100,8 @@ def declarative_stream_loader(
 
 
 # ---------------------------------------------------------------------------
-# windowed aggregations (work identically on batch and streaming frames)
+# mergeable summaries and windowed monitors (batch or streaming frames)
 # ---------------------------------------------------------------------------
-
-def windowed_event_counts(
-    events: DataFrame,
-    *,
-    ts_column: str = "ts",
-    window_duration: str = "1 hour",
-    slide_duration: str | None = None,
-    watermark: str | None = None,
-    group_columns: tuple[str, ...] = ("event_type",),
-) -> DataFrame:
-    """Tumbling/sliding window counts + value sum per group.
-
-    On a streaming frame pass ``watermark`` (e.g. ``"2 hours"``) to bound
-    state; on a batch frame leave it None — the plan is identical otherwise,
-    which is what lets the DuckDB oracle check the batch twin of the
-    streaming query.
-    """
-    df = events
-    if watermark is not None:
-        df = df.withWatermark(ts_column, watermark)
-    win = (
-        F.window(F.col(ts_column), window_duration, slide_duration)
-        if slide_duration
-        else F.window(F.col(ts_column), window_duration)
-    )
-    return (
-        df.groupBy(win.alias("win"), *group_columns)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("sum_value"),
-            F.approx_count_distinct("user_id").alias("approx_users"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            *group_columns,
-            "n_events",
-            "sum_value",
-            "approx_users",
-        )
-    )
-
-
-def dedup_stream(
-    events: DataFrame,
-    key_columns: Sequence[str],
-    *,
-    ts_column: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact deduplication: emit the first arrival of each key,
-    drop re-deliveries within the watermark horizon.
-
-    ``dropDuplicatesWithinWatermark`` keys state on ``key_columns`` only
-    (unlike ``dropDuplicates``, whose streaming state without a timestamp
-    column grows forever) and evicts each key's state once the event-time
-    watermark passes its first-seen timestamp + delay — bounded state, the
-    requirement for an unbounded CDC/dedup stream. The batch twin is plain
-    ``dropDuplicates(key_columns)`` (exactly what the v2 loaders use), which
-    is what lets tests pin stream == batch end states.
-    """
-    return events.withWatermark(ts_column, watermark).dropDuplicatesWithinWatermark(
-        list(key_columns)
-    )
-
-
-def session_windows(
-    events: DataFrame,
-    *,
-    ts_column: str = "ts",
-    gap: str = "30 minutes",
-    key_column: str = "user_id",
-    watermark: str | None = None,
-) -> DataFrame:
-    """Session windows per key: a session closes after ``gap`` of silence.
-
-    Uses ``F.session_window`` (merging windows); batch/streaming identical
-    modulo the watermark.
-    """
-    df = events
-    if watermark is not None:
-        df = df.withWatermark(ts_column, watermark)
-    return (
-        df.groupBy(F.session_window(F.col(ts_column), gap).alias("win"), key_column)
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col(key_column),
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# custom stateful operator (applyInPandasWithState)
-# ---------------------------------------------------------------------------
-
-_RUNNING_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("total", T.DoubleType()),
-    ]
-)
-
-
-def running_user_totals(stream: DataFrame) -> DataFrame:
-    """Custom stateful operator: running per-user event count + value total.
-
-    Demonstrates ``applyInPandasWithState`` (Arrow-batched user state) — the
-    escape hatch for operators Structured Streaming lacks natively. Emits
-    one updated row per user per micro-batch.
-    """
-
-    def update(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdf_iter:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    return stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_RUNNING_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def running_user_totals_tws(stream: DataFrame, *, ttl_ms: int | None = None) -> DataFrame:
-    """``running_user_totals`` on the modern ``transformWithStateInPandas``
-    API (Spark 4 arbitrary stateful processing — the successor to
-    ``applyInPandasWithState``): named state variables on a handle instead
-    of one opaque tuple, first-class state TTL, and timers. Same output
-    contract as the legacy twin — one updated row per user per micro-batch
-    — pinned equal in tests so either API can back the operator.
-
-    ``ttl_ms`` demonstrates the API's built-in state expiry (idle users'
-    state is dropped by the engine — the unbounded-cardinality guard the
-    legacy API needed manual timeouts for).
-
-    Runtime requirements (cluster, not sandbox): the RocksDB state store
-    provider (``spark.sql.streaming.stateStore.providerClass``) and the
-    ``protobuf`` package (the Python↔JVM state-server protocol) — the
-    matching test skips where protobuf is absent.
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    state_schema = T.StructType(
-        [
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            if ttl_ms is None:
-                self._totals = handle.getValueState("totals", state_schema)
-            else:
-                self._totals = handle.getValueState(
-                    "totals", state_schema, ttlDurationMs=ttl_ms
-                )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            prev = self._totals.get() if self._totals.exists() else (0, 0.0)
-            n, total = int(prev[0]), float(prev[1])
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    # State TTL is only legal in ProcessingTime mode (Spark raises
-    # STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL otherwise), so
-    # the time mode follows the ttl_ms parameter.
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=_RUNNING_SCHEMA,
-        outputMode="Update",
-        timeMode="None" if ttl_ms is None else "ProcessingTime",
-    )
-
-
-def stream_stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: str = "user_id",
-    ts_column: str = "ts",
-    watermark: str = "1 hour",
-    max_lag: str = "30 minutes",
-    left_prefix: str = "l",
-    right_prefix: str = "r",
-) -> DataFrame:
-    """Stream-stream equi-join with an event-time interval condition.
-
-    Matches right rows that occur within ``[left.ts, left.ts + max_lag]`` —
-    e.g. purchases within 30 minutes of a click. Both sides need watermarks
-    so Spark can bound join state; the interval condition is what makes
-    state eviction possible at all (an unbounded stream-stream join never
-    drops state).
-    """
-    lw = left.withWatermark(ts_column, watermark).alias(left_prefix)
-    rw = right.withWatermark(ts_column, watermark).alias(right_prefix)
-    lcol = lambda c: F.col(f"{left_prefix}.{c}")  # noqa: E731
-    rcol = lambda c: F.col(f"{right_prefix}.{c}")  # noqa: E731
-    cond = (
-        (lcol(on) == rcol(on))
-        & (rcol(ts_column) >= lcol(ts_column))
-        & (rcol(ts_column) <= lcol(ts_column) + F.expr(f"INTERVAL {max_lag}"))
-    )
-    return lw.join(rw, cond, "inner")
-
-
-_SESSION_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_start", T.TimestampType()),
-        T.StructField("session_end", T.TimestampType()),
-        T.StructField("n_events", T.LongType()),
-    ]
-)
-_SESSION_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("start_us", T.LongType()),
-        T.StructField("last_us", T.LongType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
-
-def sessionize_stateful(
-    stream: DataFrame,
-    *,
-    ts_column: str = "ts",
-    key_column: str = "user_id",
-    gap_seconds: int = 1800,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Sessionization as a custom stateful operator with **event-time
-    timeout**: a session is emitted only once, when the watermark passes
-    ``last_event + gap`` — at which point its state is evicted.
-
-    This is the pattern `F.session_window` cannot express when you need
-    one-shot emission of *closed* sessions (e.g. to feed a downstream
-    append-only sink); it also demonstrates bounded state on an unbounded
-    stream — the prerequisite for running custom operators forever.
-    """
-
-    def fn(key, pdf_iter, state: GroupState):
-        import datetime as _dt
-
-        import pandas as pd
-
-        if state.hasTimedOut:
-            start_us, last_us, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "session_start": [
-                        _dt.datetime.utcfromtimestamp(start_us / 1e6)
-                    ],
-                    "session_end": [
-                        _dt.datetime.utcfromtimestamp(last_us / 1e6 + gap_seconds)
-                    ],
-                    "n_events": [n],
-                }
-            )
-            return
-        start_us, last_us, n = state.get if state.exists else (None, None, 0)
-        for pdf in pdf_iter:
-            ts_us = (pdf[ts_column].astype("int64") // 1000).tolist()
-            for v in ts_us:
-                start_us = v if start_us is None else min(start_us, v)
-                last_us = v if last_us is None else max(last_us, v)
-            n += len(pdf)
-        state.update((start_us, last_us, n))
-        state.setTimeoutTimestamp(last_us // 1000 + gap_seconds * 1000)
-
-    return (
-        stream.withWatermark(ts_column, watermark)
-        .groupBy(key_column)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_SESSION_OUT_SCHEMA,
-            stateStructType=_SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def funnel_stateful(
-    stream: DataFrame,
-    stages: list[str],
-    *,
-    ts_column: str = "ts",
-    user_column: str = "user_id",
-    stage_column: str = "event_type",
-) -> DataFrame:
-    """Streaming twin of ``operators.funnel.funnel``: per-user ordered-stage
-    progression maintained as bounded custom state.
-
-    State per user is ``(depth, stage_ts[0..n))`` — O(stages), constant per
-    user forever, regardless of event volume. Each micro-batch advances the
-    stage machine over its rows in event-time order: an event advances the
-    funnel iff it is the next awaited stage AND strictly after the
-    previously reached stage (same strictly-after contract as the batch
-    operator). Emits the user's current funnel row every micro-batch that
-    touches the user (update mode).
-
-    In-order contract: like the CDC loaders, per-user arrival order across
-    micro-batches must respect event time (the batch operator finds the
-    globally earliest chain; replaying history out of order can overshoot
-    — e.g. a late 'view' preceding an already-consumed 'click' can't
-    retroactively form an earlier chain). Stream==batch equivalence under
-    ordered replay is pinned in tests.
-    """
-    n = len(stages)
-    if n == 0:
-        raise ValueError("stages must be non-empty")
-    out_schema = T.StructType(
-        [T.StructField(user_column, T.LongType())]
-        + [T.StructField(f"{s}_ts", T.TimestampType()) for s in stages]
-        + [T.StructField("funnel_depth", T.IntegerType())]
-    )
-    state_schema = T.StructType(
-        [T.StructField("depth", T.LongType())]
-        + [T.StructField(f"t{i}", T.LongType()) for i in range(n)]
-    )
-
-    def fn(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        if state.exists:
-            vals = list(state.get)
-        else:
-            vals = [0] + [None] * n
-        depth, ts_us = int(vals[0]), vals[1:]
-        rows = []
-        for pdf in pdf_iter:
-            rows.append(pdf[[ts_column, stage_column]])
-        events = pd.concat(rows).sort_values(ts_column, kind="stable")
-        for ts, stage in zip(
-            events[ts_column].astype("int64") // 1000, events[stage_column]
-        ):
-            if depth < n and stage == stages[depth]:
-                t = int(ts)
-                if depth == 0 or t > ts_us[depth - 1]:
-                    ts_us[depth] = t
-                    depth += 1
-        state.update(tuple([depth] + ts_us))
-        out = {user_column: [key[0]]}
-        for i, s in enumerate(stages):
-            out[f"{s}_ts"] = [
-                pd.Timestamp(ts_us[i] * 1000) if ts_us[i] is not None else pd.NaT
-            ]
-        out["funnel_depth"] = [depth]
-        yield pd.DataFrame(out)
-
-    return stream.groupBy(user_column).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
 
 def rollup_stream_loader(
     summary_table: str,
@@ -531,100 +136,6 @@ def rollup_stream_loader(
         else:
             merged = part
         # break lineage off the table we are about to overwrite
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").saveAsTable(summary_table)
-        spark.catalog.refreshTable(summary_table)
-
-    return loader
-
-
-def near_dedup_stream_loader(
-    docs_table: str,
-    signatures_table: str,
-    pairs_table: str,
-    *,
-    id_column: str = "doc_id",
-    text_column: str = "text",
-    num_perms: int = 64,
-    bands: int = 16,
-    shingle_size: int = 3,
-    threshold: float = 0.8,
-):
-    """foreachBatch incremental near-dedup maintenance: per micro-batch,
-    sign ONLY the arriving documents, band them against the persisted
-    signature table, verify candidates, and append the new near-dup pairs
-    (dedup.incremental_minhash_pairs). State grows with the corpus — one
-    signature row per document ever seen — while per-batch work scales
-    with the batch: the accumulation loop a crawl pipeline runs for
-    months. After any number of micro-batches,
-    ``pairs_table == minhash_dedup_pairs(all docs ever)`` — pinned by
-    ``test_streaming.py::test_near_dedup_stream_matches_batch``.
-    """
-    from pyspark_playground_spark.operators import dedup as du
-
-    def loader(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        batch = batch_df.localCheckpoint(eager=True)
-        if spark.catalog.tableExists(signatures_table):
-            sigs_old = spark.table(signatures_table)
-            corpus = spark.table(docs_table).unionByName(
-                batch.select(*spark.table(docs_table).columns)
-            )
-            pairs = du.incremental_minhash_pairs(
-                corpus, sigs_old, batch, id_column, text_column,
-                num_perms=num_perms, bands=bands,
-                shingle_size=shingle_size, threshold=threshold,
-            )
-        else:
-            pairs = du.minhash_dedup_pairs(
-                batch, id_column, text_column,
-                num_perms=num_perms, bands=bands,
-                shingle_size=shingle_size, threshold=threshold,
-            )
-        pairs.localCheckpoint(eager=True).write.mode("append").saveAsTable(
-            pairs_table
-        )
-        du.minhash_signatures(
-            batch, id_column, text_column,
-            num_perms=num_perms, shingle_size=shingle_size,
-        ).write.mode("append").saveAsTable(signatures_table)
-        batch.write.mode("append").saveAsTable(docs_table)
-        for t in (pairs_table, signatures_table, docs_table):
-            spark.catalog.refreshTable(t)
-
-    return loader
-
-
-def concurrency_stream_loader(
-    summary_table: str,
-    start_us_column: str,
-    end_us_column: str,
-    *,
-    bucket_us: int = 3_600_000_000,
-):
-    """foreachBatch adapter maintaining the mergeable concurrency-curve
-    partials (operators/temporal.py concurrency_deltas): per micro-batch,
-    compute batch-sized per-bucket boundary sums, merge with the stored
-    summary (summary-sized work), overwrite. After any number of
-    micro-batches ``finalize_concurrency(summary)`` equals the batch
-    curve over all intervals ever seen — pinned by
-    ``test_streaming.py::test_concurrency_stream_matches_batch``.
-    """
-    from pyspark_playground_spark.operators import temporal as tp
-
-    def loader(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        part = tp.concurrency_deltas(
-            batch_df, start_us_column, end_us_column, bucket_us=bucket_us
-        )
-        if spark.catalog.tableExists(summary_table):
-            merged = tp.merge_concurrency_deltas(spark.table(summary_table), part)
-        else:
-            merged = part
         merged = merged.localCheckpoint(eager=True)
         merged.write.mode("overwrite").saveAsTable(summary_table)
         spark.catalog.refreshTable(summary_table)
@@ -1427,103 +938,6 @@ def isotonic_vs_bins(label_bins: DataFrame) -> DataFrame:
     )
 
 
-def windowed_coverage_counts(
-    events: DataFrame,
-    *,
-    threshold: DataFrame,
-    ts_column: str = "ts",
-    value_column: str = "value",
-    window_duration: str = "1 hour",
-    watermark: str | None = None,
-) -> DataFrame:
-    """Streaming-legal partials of the conformal-coverage drift monitor
-    (the 7th monitor, beside the PSI/KS/CvM/JSD/AUC/isotonic family):
-    per-window ``(n, n_covered)`` counts of values at or below a STATIC
-    conformal threshold. One windowed aggregation of mergeable sums —
-    bounded state under a watermark, identical on a stream and its
-    batch twin.
-
-    ``threshold`` is a ONE-ROW static frame ``(threshold)`` — compute it
-    batch-side from the calibration corpus with
-    ``profiling.conformal_threshold`` (the envelope must be FIXED: a
-    per-batch re-calibration would silently move the goalposts every
-    window, the same reason ``windowed_value_bins`` takes static
-    bounds). A NULL threshold (calibration too small) counts everything
-    covered — the batch operator's convention.
-
-    Returns ``(window_start, window_end, n, n_covered)``; finish with
-    :func:`coverage_vs_target`.
-    """
-    df = events
-    if watermark is not None:
-        df = df.withWatermark(ts_column, watermark)
-    joined = df.join(F.broadcast(threshold)).select(
-        F.col(ts_column).alias("__ts"),
-        F.when(
-            F.col("threshold").isNull()
-            | (F.col(value_column) <= F.col("threshold")),
-            1,
-        )
-        .otherwise(0)
-        .alias("__cov"),
-        F.col(value_column).alias("__v"),
-    ).filter(F.col("__v").isNotNull())
-    return (
-        joined.groupBy(
-            F.window(F.col("__ts"), window_duration).alias("win")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("__cov").alias("n_covered"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "n",
-            "n_covered",
-        )
-    )
-
-
-def coverage_vs_target(
-    counts: DataFrame,
-    *,
-    target_x6: int,
-    slack_x6: int = 50_000,
-) -> DataFrame:
-    """Finish the conformal-coverage monitor over
-    :func:`windowed_coverage_counts` partials: defensively re-aggregate
-    (an update-mode sink or a reprocessed batch can hold several rows
-    per window — duplicates would double-count), then the exact integer
-    coverage ratio and the breach flag. Everything after the partials
-    is bounded by the window count.
-
-    Returns ``(window_start, window_end, n, n_covered, coverage_x6,
-    target_x6, breached)`` — the batch operator
-    ``profiling.windowed_conformal_coverage``'s exact output shape, so
-    stream==batch is pinnable row-for-row.
-    """
-    agg = (
-        counts.groupBy("window_start", "window_end")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("n_covered").cast("long").alias("n_covered"),
-        )
-    )
-    return agg.select(
-        "window_start",
-        "window_end",
-        "n",
-        "n_covered",
-        F.expr("(n_covered * 1000000L) DIV n").alias("coverage_x6"),
-        F.lit(int(target_x6)).cast("long").alias("target_x6"),
-        (
-            F.expr("(n_covered * 1000000L) DIV n")
-            < F.lit(int(target_x6) - int(slack_x6))
-        ).alias("breached"),
-    )
-
-
 def windowed_cell_counts(
     vectors: DataFrame,
     *,
@@ -1534,8 +948,7 @@ def windowed_cell_counts(
     watermark: str | None = None,
 ) -> DataFrame:
     """Streaming-legal partials of the vector-index assignment-drift
-    monitor (the 8th monitor, beside PSI/KS/CvM/JSD/AUC/isotonic/
-    coverage): per (window, cell) counts plus the summed quantized
+    monitor (beside PSI/KS/CvM/JSD/AUC/isotonic): per (window, cell) counts plus the summed quantized
     distance-to-assigned-centroid of an embedding stream against a
     FROZEN coarse model — `similarity.ivf_assignment_drift_report`'s
     streaming twin, watching the index go stale window by window
@@ -1634,143 +1047,4 @@ def cell_drift_vs_model(counts: DataFrame) -> DataFrame:
                 + F.lit(0.5)
             ).cast("long").alias("mean_d2_q6"),
         )
-    )
-
-
-def windowed_arm_moments(
-    events: DataFrame,
-    *,
-    cohort_column,
-    value_column: str = "value",
-    ts_column: str = "ts",
-    window_duration: str = "1 hour",
-    watermark: str | None = None,
-) -> DataFrame:
-    """Streaming-legal partials for the ALWAYS-VALID experiment monitor
-    (the mSPRT of ``profiling.msprt_mean_test`` made windowed): per
-    (event-time window, arm) exact moment sums — n, Σy, Σy² with y
-    quantized once to q6 BIGINT and the sums carried in DECIMAL(38,0).
-    Sums are mergeable, so late data folds in under a watermark and
-    the finisher defensively re-aggregates multiple partial rows per
-    (window, arm) — the update-mode-sink convention every finisher in
-    this module shares; state is bounded at windows × 2 rows. Rows with a NULL arm or
-    value are excluded (same rule as the batch operator).
-
-    Returns ``(window_start, window_end, arm, n, s_q6, q_q6)``.
-    """
-    co = (
-        F.col(cohort_column)
-        if isinstance(cohort_column, str)
-        else cohort_column
-    ).cast("boolean")
-    df = events
-    if watermark is not None:
-        df = df.withWatermark(ts_column, watermark)
-    y = F.floor(
-        F.col(value_column).cast("double") * F.lit(1e6) + F.lit(0.5)
-    ).cast("long")
-    base = df.select(
-        F.col(ts_column).alias("__ts"), y.alias("__y"), co.alias("__t")
-    ).filter(F.col("__y").isNotNull() & F.col("__t").isNotNull())
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    return (
-        base.groupBy(
-            F.window(F.col("__ts"), window_duration).alias("win"), "__t"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(d38(F.col("__y"))).alias("s_q6"),
-            F.sum(d38(F.col("__y")) * F.col("__y")).alias("q_q6"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            F.col("__t").alias("arm"),
-            "n",
-            "s_q6",
-            "q_q6",
-        )
-    )
-
-
-def msprt_vs_assignment(
-    moments: DataFrame,
-    *,
-    tau: float,
-    alpha_ppm: int = 50_000,
-) -> DataFrame:
-    """Finish :func:`windowed_arm_moments` partials into the mSPRT
-    PEEKING CURVE (the ninth monitor finish): defensively re-aggregate
-    duplicate partials, accumulate both arms' exact DECIMAL moments
-    over the window order (cumulative — the mixture construction makes
-    the WHOLE column of p-values simultaneously valid, so 'stop at the
-    first window with p ≤ α' is an honest sequential test), and apply
-    the shared fixed-order / quantized-libm closed form
-    (``profiling._msprt_terms``). Everything after the partials is
-    bounded by the window count.
-
-    Returns ``(window_start, window_end, n_ctrl, n_treat, diff_q6,
-    log_lambda_q6, p_q6, reject)`` — the same columns per window as
-    the batch :func:`~pyspark_playground_spark.operators.profiling.
-    msprt_monitor`.
-    """
-    from pyspark_playground_spark.operators.profiling import _msprt_terms
-
-    if tau <= 0:
-        raise ValueError(f"tau must be > 0: {tau}")
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    folded = moments.groupBy("window_start", "window_end").agg(
-        F.coalesce(
-            F.sum(F.when(~F.col("arm"), F.col("n"))), F.lit(0)
-        ).alias("__dna"),
-        F.coalesce(
-            F.sum(F.when(~F.col("arm"), d38(F.col("s_q6")))), F.lit(0)
-        ).alias("__dsa"),
-        F.coalesce(
-            F.sum(F.when(~F.col("arm"), d38(F.col("q_q6")))), F.lit(0)
-        ).alias("__dqa"),
-        F.coalesce(
-            F.sum(F.when(F.col("arm"), F.col("n"))), F.lit(0)
-        ).alias("__dnb"),
-        F.coalesce(
-            F.sum(F.when(F.col("arm"), d38(F.col("s_q6")))), F.lit(0)
-        ).alias("__dsb"),
-        F.coalesce(
-            F.sum(F.when(F.col("arm"), d38(F.col("q_q6")))), F.lit(0)
-        ).alias("__dqb"),
-    )
-    w = Window.orderBy("window_start").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = folded.select(
-        "window_start",
-        "window_end",
-        F.sum("__dna").over(w).alias("__na"),
-        F.sum(d38(F.col("__dsa"))).over(w).alias("__sa"),
-        F.sum(d38(F.col("__dqa"))).over(w).alias("__qa"),
-        F.sum("__dnb").over(w).alias("__nb"),
-        F.sum(d38(F.col("__dsb"))).over(w).alias("__sb"),
-        F.sum(d38(F.col("__dqb"))).over(w).alias("__qb"),
-    )
-    tau2 = F.lit(float(tau) * 1e6) * F.lit(float(tau) * 1e6)
-    ok, y, log_lam, p = _msprt_terms(
-        F.col("__na"), F.col("__sa"), F.col("__qa"),
-        F.col("__nb"), F.col("__sb"), F.col("__qb"), tau2,
-    )
-    return cum.select(
-        "window_start",
-        "window_end",
-        F.col("__na").cast("long").alias("n_ctrl"),
-        F.col("__nb").cast("long").alias("n_treat"),
-        F.when(ok, F.floor(y + F.lit(0.5))).cast("long").alias("diff_q6"),
-        F.when(ok, F.floor(log_lam * F.lit(1e6) + F.lit(0.5)))
-        .cast("long")
-        .alias("log_lambda_q6"),
-        F.when(ok, F.floor(p * F.lit(1e6) + F.lit(0.5)))
-        .cast("long")
-        .alias("p_q6"),
-        F.when(
-            ok,
-            F.floor(p * F.lit(1e6) + F.lit(0.5)) <= F.lit(int(alpha_ppm)),
-        ).alias("reject"),
     )

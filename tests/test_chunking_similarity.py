@@ -58,51 +58,6 @@ def test_source_similarity_exact_counts(spark):
     assert ("a", "c") not in out and ("b", "c") not in out
 
 
-def test_gram_fast_matches_exact(spark, sf_dir):
-    """Per-partition NumPy Gram agrees with the exact decimal path to
-    float tolerance."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    exact = {
-        (r["i"], r["j"]): float(r["sxy"])
-        for r in sim.gram_matrix_exact(emb).collect()
-    }
-    fast = {
-        (r["i"], r["j"]): r["sxy"]
-        for r in sim.gram_matrix_fast(emb, dim=64).collect()
-    }
-    assert set(exact) == set(fast) and len(exact) == 64 * 65 // 2
-    for k in exact:
-        assert abs(exact[k] - fast[k]) <= 1e-9 * max(1.0, abs(exact[k]))
-    n = emb.count()
-    assert all(r["n_vectors"] == n for r in sim.gram_matrix_fast(emb, dim=64).collect())
-
-
-def test_pca_project_properties(spark, sf_dir):
-    """PC variances are ordered and match numpy PCA on the same data;
-    projections agree with a driver-side reference computation."""
-    import numpy as np
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    got = sim.pca_project(emb, k=3).orderBy("vec_id").collect()
-    X = np.array(
-        [r["embedding"] for r in emb.orderBy("vec_id").collect()], dtype="float64"
-    )
-    Xc = X - X.mean(axis=0)
-    cov = (X.T @ X) / len(X) - np.outer(X.mean(axis=0), X.mean(axis=0))
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][:3]
-    comps = vecs[:, order]
-    for c in range(3):
-        j = int(np.argmax(np.abs(comps[:, c])))
-        if comps[j, c] < 0:
-            comps[:, c] = -comps[:, c]
-    ref = Xc @ comps
-    P = np.array([[r["pc0"], r["pc1"], r["pc2"]] for r in got])
-    assert np.allclose(P, ref, atol=1e-6)
-    v = P.var(axis=0)
-    assert v[0] >= v[1] >= v[2] > 0
-
-
 def _numpy_lloyd(vecs, k, iterations):
     import numpy as np
 

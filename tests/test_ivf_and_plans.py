@@ -439,7 +439,7 @@ def test_star_rounds_match_groupby_reference(spark):
 
 
 def test_unrolled_kernels_match_generic_folds(spark):
-    """r11: the declared-dimension kernels (dot/cosine/sqdist
+    """r11: the declared-dimension kernels (cosine/sqdist
     *_expr_fixed) emit an explicit codegen'd add-chain guarded by
     ``size(v) == dim``; this pins bit-identity against the generic
     HigherOrderFunction folds for (a) rows of the declared size — the
@@ -479,14 +479,11 @@ def test_unrolled_kernels_match_generic_folds(spark):
         "id",
         sim.sqdist_expr_fixed("__qv", "__cv", dim, cast=False).alias("f_sq"),
         generic_sq.alias("g_sq"),
-        sim.dot_expr_fixed("__qv", "__cv", dim).alias("f_dot"),
-        sim.dot_expr(F.col("__qv"), F.col("__cv")).alias("g_dot"),
         sim.cosine_expr_fixed("__qv", "__cv", dim).alias("f_cos"),
         sim.cosine_expr(F.col("__qv"), F.col("__cv")).alias("g_cos"),
     ).collect()
     for r in got:
         assert repr(r["f_sq"]) == repr(r["g_sq"]), r["id"]
-        assert repr(r["f_dot"]) == repr(r["g_dot"]), r["id"]
         assert repr(r["f_cos"]) == repr(r["g_cos"]), r["id"]
 
     # cast=True variant over a float-typed source (the raw-column path)

@@ -153,9 +153,6 @@ def test_scrub_pii_and_url_stats(spark):
     assert "[EMAIL]" in r[1]["scrubbed"] and r[1]["scrubbed"].count("[URL]") == 2
     assert "jane.doe" not in r[1]["scrubbed"]
     assert r[2]["n_emails"] == 0 and r[2]["scrubbed"] == "no pii here"
-    u = {x["doc_id"]: x for x in tx.url_stats(df).collect()}
-    assert u[1]["url_domains"] == ["docs.example.com", "other.org"]
-    assert u[2]["url_domains"] == []
 
 
 def test_sequence_packing_two_phase_equals_single_window(spark):
@@ -345,14 +342,6 @@ def test_multimodal_decode_stub_raises(docs):
         decoded.collect()
 
 
-def test_sample_frames(docs):
-    media = mm.attach_media_column(docs, "text")
-    frames = mm.sample_frames(media, every_n_bytes=10)
-    n_rows = frames.count()
-    assert n_rows > media.count()  # exploded
-    assert frames.filter(F.col("frame_byte_start") % 10 != 0).count() == 0
-
-
 def test_multimodal_resize_and_audio(spark, sf_dir):
     from pyspark_playground_spark.operators import multimodal as mm
     from pyspark.sql import functions as F
@@ -482,22 +471,6 @@ def test_c4_style_filter_rules(spark):
     assert not out[3]["keep"] and not out[3]["no_braces"]
     assert not out[4]["keep"] and not out[4]["no_blocklist"]
     assert not out[5]["keep"] and not out[5]["has_stopword"]
-
-
-def test_lsh_candidate_paths_agree(docs):
-    # the precomputed-signature entry point (lsh_candidate_pairs) and the
-    # fused signature→banding path must emit identical candidate sets
-    sigs = dd.minhash_signatures(docs)
-    via_sigs = {
-        (r["id_a"], r["id_b"])
-        for r in dd.lsh_candidate_pairs(sigs).collect()
-    }
-    banded = dd.minhash_band_buckets(docs)
-    via_fused = {
-        (r["id_a"], r["id_b"])
-        for r in dd._pairs_from_banded(banded, "doc_id").collect()
-    }
-    assert via_sigs == via_fused and via_sigs  # non-empty: docs 1/2 collide
 
 
 def test_token_chunk_dedup_two_exchanges(spark):
@@ -1045,44 +1018,6 @@ def test_grouped_token_budget_matches_per_group_prefix(spark):
             if cum <= 100:
                 ref[i] = cum
     assert got == ref and 0 < len(ref) < len(rows)
-
-
-def test_read_media_files_binary_ingestion(spark, tmp_path):
-    from pyspark_playground_spark.sources.files import read_media_files
-
-    d = tmp_path / "imgs"
-    (d / "sub").mkdir(parents=True)
-    (d / "a.png").write_bytes(b"\x89PNG" + b"x" * 100)
-    (d / "sub" / "b.png").write_bytes(b"\x89PNG" + b"y" * 5000)
-    (d / "c.txt").write_bytes(b"not an image")
-
-    out = read_media_files(
-        spark, str(d), glob="*.png", media_type="image/png", with_checksum=True
-    )
-    rows = {r["path"].split("/")[-1]: r for r in out.collect()}
-    # glob filters the txt; recursive lookup finds the nested file
-    assert set(rows) == {"a.png", "b.png"}
-    assert rows["a.png"]["n_bytes"] == 104
-    assert bytes(rows["b.png"]["content"])[:4] == b"\x89PNG"
-    meta = rows["a.png"]["media_meta"]
-    assert meta["media_type"] == "image/png" and meta["checksum"] != ""
-
-    # size guard prunes on file-metadata length, before any content read
-    small = read_media_files(spark, str(d), glob="*.png", max_bytes=1000)
-    assert [r["path"].split("/")[-1] for r in small.collect()] == ["a.png"]
-
-    # the ingested frame feeds the multimodal operators directly
-    decoded = mm.fake_decode_image(small.select("path", "content"))
-    assert decoded.count() == 1
-
-
-def test_fake_decode_arrow_twin_parity(docs):
-    # the mapInArrow lane must produce exactly the mapInPandas output
-    media = mm.attach_media_column(docs, "text").select("doc_id", "content")
-    via_pandas = sorted(map(tuple, mm.fake_decode_image(media).collect()))
-    via_arrow = sorted(map(tuple, mm.fake_decode_image_arrow(media).collect()))
-    assert via_arrow == via_pandas
-    assert len(via_arrow) == 5
 
 
 def test_uniform_frame_plan_hand_computed(spark):

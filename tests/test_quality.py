@@ -1,9 +1,7 @@
-"""Vault integrity checks + stream-stream interval join."""
+"""Vault integrity checks."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from datetime import datetime
 
 import pytest
@@ -11,7 +9,6 @@ from pyspark.sql import functions as F
 
 from pyspark_playground_spark.conventions import DataVaultConventions
 from pyspark_playground_spark.operators import quality as q
-from pyspark_playground_spark.streaming import cdc as st
 
 C = DataVaultConventions()
 T1 = datetime(2026, 1, 1)
@@ -54,43 +51,6 @@ def test_integrity_report_clean_and_broken(spark):
     by2 = {(r.check, r.table): r for r in report2}
     assert by2[("unique_hkey", "HUB__X")].violations == 1
     assert by2[("orphans", "SAT__X")].violations == 1
-
-
-def test_stream_stream_interval_join(spark):
-    d = tempfile.mkdtemp(prefix="ssj-")
-    try:
-        schema = "user_id long, ts timestamp, event_type string, value double"
-        rows = [
-            (1, datetime(2026, 5, 1, 10, 0), "click", 1.0),
-            (1, datetime(2026, 5, 1, 10, 10), "purchase", 9.0),   # within 30m
-            (1, datetime(2026, 5, 1, 11, 30), "purchase", 7.0),   # too late
-            (2, datetime(2026, 5, 1, 10, 0), "click", 1.0),       # no purchase
-            (3, datetime(2026, 5, 1, 10, 5), "purchase", 5.0),    # no click
-        ]
-        src = f"{d}/events"
-        spark.createDataFrame(rows, schema).write.parquet(src)
-        stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-        clicks = stream.filter(F.col("event_type") == "click")
-        purchases = stream.filter(F.col("event_type") == "purchase")
-        joined = st.stream_stream_interval_join(
-            clicks, purchases, max_lag="30 minutes"
-        ).select(
-            F.col("l.user_id").alias("user_id"),
-            F.col("l.ts").alias("click_ts"),
-            F.col("r.ts").alias("purchase_ts"),
-            F.col("r.value").alias("purchase_value"),
-        )
-        qy = (
-            joined.writeStream.format("memory").queryName("ssj")
-            .option("checkpointLocation", f"{d}/ckpt")
-            .trigger(availableNow=True).start()
-        )
-        qy.awaitTermination(120)
-        got = spark.sql("SELECT * FROM ssj").collect()
-        assert len(got) == 1
-        assert got[0]["user_id"] == 1 and got[0]["purchase_value"] == 9.0
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_robust_outliers_flags_and_degenerate_group(spark):

@@ -1,9 +1,7 @@
-"""Scale helpers: salted joins/aggregates, xxhash64 vault, file sources."""
+"""Scale helpers: salted joins/aggregates, xxhash64 vault."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from datetime import datetime
 
 import pytest
@@ -14,14 +12,6 @@ from pyspark_playground_spark.conventions import ColumnDefinition, VaultConfig
 from pyspark_playground_spark.operators import raw_vault as rv
 from pyspark_playground_spark.operators import skew
 from pyspark_playground_spark.operators.vault import RawVault
-from pyspark_playground_spark.sources import files
-
-
-@pytest.fixture()
-def tmpdir():
-    d = tempfile.mkdtemp(prefix="scale-test-")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -123,141 +113,6 @@ def test_xxhash64_vault_end_to_end(spark):
                load_ts=datetime(2026, 9, 2))
     assert spark.table("xx_raw.HUB__THINGS").count() == 1
     assert spark.table("xx_raw.SAT__THINGS").count() == 1
-
-
-def test_file_sources_roundtrip(spark, tmpdir):
-    df = spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", 2.5)], "id int, s string, x double"
-    )
-    for fmt in ("parquet", "orc", "csv", "json"):
-        path = f"{tmpdir}/{fmt}_out"
-        files.write_sink(df, path, file_format=fmt)
-        back = files.read_source(
-            spark, path, file_format=fmt,
-            schema="id int, s string, x double" if fmt in ("csv", "json") else None,
-        )
-        assert back.count() == 2
-        assert {r["s"] for r in back.collect()} == {"a", "b"}
-
-    # extension inference + partitioned layout
-    files.write_sink(df, f"{tmpdir}/part.parquet", partition_by=["s"])
-    back = files.read_source(spark, f"{tmpdir}/part.parquet")
-    assert back.count() == 2
-    import os
-    assert os.path.isdir(f"{tmpdir}/part.parquet/s=a")
-
-
-def test_compact_small_files(spark, tmpdir):
-    from pyspark_playground_spark.sources import files as fsrc
-
-    path = f"{tmpdir}/fragmented"
-    # many tiny files (AQE may coalesce some of the 20 shuffle partitions)
-    spark.range(20).repartition(20).write.parquet(path)
-    before = fsrc.describe_files(spark, path)
-    assert before["n_files"] > 1
-    report = fsrc.compact_small_files(spark, path, target_file_bytes=1 << 30)
-    after = fsrc.describe_files(spark, path)
-    assert after["n_files"] == 1 and report["target_partitions"] == 1
-    # contents identical, path stable
-    assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == list(range(20))
-
-
-def test_partitioned_write_prunes_partitions(spark, tmpdir):
-    """Hive-partitioned sink + filter on the partition column: the read
-    plan must show partition pruning (PartitionFilters), not a full scan —
-    the property that turns a 100 TB date-partitioned table into a
-    single-day read."""
-    from pyspark.sql import functions as F
-    from pyspark_playground_spark.sources import files as fs
-
-    df = spark.range(100).select(
-        F.col("id"),
-        (F.col("id") % 4).cast("string").alias("shard"),
-    )
-    path = f"{tmpdir}/part_tbl"
-    fs.write_sink(df, path, partition_by=["shard"])
-
-    back = spark.read.parquet(path).where(F.col("shard") == "2")
-    plan = back._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "PartitionFilters" in plan
-    import re
-    pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
-    assert "shard" in pf, plan
-    assert back.count() == 25
-
-
-def test_quarantine_read_splits_clean_and_corrupt(spark, tmp_path):
-    from pyspark_playground_spark.sources.files import read_source_with_quarantine
-
-    p = tmp_path / "feed.jsonl"
-    p.write_text(
-        '{"id": 1, "v": "a"}\n'
-        "this is not json\n"
-        '{"id": 2, "v": "b"}\n'
-        '{"id": "NOT_A_NUMBER", "v": "c"}\n'
-    )
-    clean, quarantined = read_source_with_quarantine(
-        spark, str(p), "id BIGINT, v STRING"
-    )
-    assert sorted((r.id, r.v) for r in clean.collect()) == [(1, "a"), (2, "b")]
-    bad = [r.raw_record for r in quarantined.collect()]
-    assert len(bad) == 2
-    assert any("not json" in b for b in bad)
-    assert any("NOT_A_NUMBER" in b for b in bad)
-
-
-def test_quarantine_read_rejects_binary_formats(spark, tmp_path):
-    import pytest
-
-    from pyspark_playground_spark.sources.files import read_source_with_quarantine
-
-    with pytest.raises(ValueError):
-        read_source_with_quarantine(spark, "x.parquet", "id BIGINT")
-
-
-def test_schema_drift_report_detects_all_three_kinds(spark):
-    from pyspark_playground_spark.sources.files import schema_drift_report
-
-    expected = "id BIGINT, name STRING, price DOUBLE"
-    observed = "id BIGINT, name INT, discount DOUBLE"
-    report = schema_drift_report(expected, observed)
-    by_col = {r["column"]: r for r in report}
-    assert by_col["name"]["status"] == "type_changed"
-    assert by_col["name"]["expected"] == "string"
-    assert by_col["price"]["status"] == "missing"
-    assert by_col["discount"]["status"] == "added"
-    assert len(report) == 3
-    # identical schemas → no drift; nullability flips are not drift
-    assert schema_drift_report(expected, expected) == []
-    df_schema = spark.createDataFrame([(1, "a", 0.5)],
-                                      "id BIGINT, name STRING, price DOUBLE").schema
-    assert schema_drift_report(expected, df_schema) == []
-
-
-def test_write_atomic_publishes_and_survives_replacement(spark, tmp_path):
-    from pyspark_playground_spark.sources.files import write_atomic
-
-    target = str(tmp_path / "tbl")
-    df1 = spark.range(5).selectExpr("id", "id * 2 AS v")
-    write_atomic(df1, target)
-    assert spark.read.parquet(target).count() == 5
-    # second publish replaces atomically; readers see old or new, never half
-    df2 = spark.range(9).selectExpr("id", "id * 3 AS v")
-    write_atomic(df2, target)
-    out = spark.read.parquet(target)
-    assert out.count() == 9
-    assert out.selectExpr("max(v)").first()[0] == 24
-    # no staging/old debris left behind
-    import os
-
-    parent = os.path.dirname(target)
-    leftovers = [d for d in os.listdir(parent)
-                 if d.startswith(".__stage_") or "__old_" in d]
-    assert leftovers == []
 
 
 def test_join_size_report_is_exact_cardinality(spark):

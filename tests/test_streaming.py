@@ -1,12 +1,13 @@
 """Streaming extensions: CDC file stream → foreachBatch → same vault state
-as batch loading; watermarked windows; custom stateful operator."""
+as batch loading; mergeable summaries and windowed monitors, stream ==
+batch."""
 
 from __future__ import annotations
 
 import shutil
 import tempfile
 import time
-from datetime import datetime, timedelta
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -127,232 +128,6 @@ def test_streaming_cdc_matches_batch_loading(spark, tmpdir):
     assert spark.table("stream_raw.SAT__THINGS").count() == 3
 
 
-def test_windowed_counts_streaming_vs_batch(spark, tmpdir):
-    """The same windowed_event_counts plan over a stream (memory sink,
-    availableNow) and over the batch frame must agree row-for-row."""
-    rows = [
-        (1, datetime(2026, 5, 1, 10, 5), "click", 1.0),
-        (1, datetime(2026, 5, 1, 10, 55), "click", 2.0),
-        (2, datetime(2026, 5, 1, 10, 20), "view", 3.0),
-        (2, datetime(2026, 5, 1, 11, 10), "click", 4.0),
-        (3, datetime(2026, 5, 1, 12, 40), "view", 5.0),
-    ]
-    schema = "user_id long, ts timestamp, event_type string, value double"
-    src = f"{tmpdir}/events"
-    spark.createDataFrame(rows, schema).write.parquet(src)
-
-    batch_out = st.windowed_event_counts(
-        spark.read.parquet(src), window_duration="1 hour"
-    )
-    expected = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in batch_out.collect()
-    }
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
-    stream_out = st.windowed_event_counts(
-        stream, window_duration="1 hour", watermark="2 hours"
-    )
-    q = (
-        stream_out.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", f"{tmpdir}/ckpt_win")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM win_counts").collect()
-    }
-    assert got == expected and len(got) == 4
-
-
-def test_session_windows_batch(spark):
-    rows = [
-        (1, datetime(2026, 5, 1, 10, 0), "a", 1.0),
-        (1, datetime(2026, 5, 1, 10, 10), "a", 1.0),   # same session (gap 30m)
-        (1, datetime(2026, 5, 1, 11, 0), "a", 1.0),    # new session
-        (2, datetime(2026, 5, 1, 10, 0), "a", 1.0),
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string, value double")
-    out = st.session_windows(df, gap="30 minutes").collect()
-    by_user = {}
-    for r in out:
-        by_user.setdefault(r["user_id"], []).append(r)
-    assert len(by_user[1]) == 2
-    first = min(by_user[1], key=lambda r: r["session_start"])
-    assert first["n_events"] == 2
-    assert first["session_end"] == datetime(2026, 5, 1, 10, 40)  # last event + gap
-    assert len(by_user[2]) == 1
-
-
-def test_running_user_totals_stateful(spark, tmpdir):
-    """applyInPandasWithState accumulates across micro-batches."""
-    schema = "user_id long, ts timestamp, event_type string, value double"
-    src = f"{tmpdir}/ev"
-    spark.createDataFrame(
-        [(1, datetime(2026, 5, 1, 10), "a", 1.0), (1, datetime(2026, 5, 1, 11), "a", 2.0),
-         (2, datetime(2026, 5, 1, 10), "a", 5.0)],
-        schema,
-    ).write.parquet(src)
-
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    out = st.running_user_totals(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("running_totals")
-        .outputMode("update")
-        .option("checkpointLocation", f"{tmpdir}/ckpt_state")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["user_id"]: (r["n_events"], r["total_value"])
-           for r in spark.sql("SELECT * FROM running_totals").collect()}
-    assert got == {1: (2, 3.0), 2: (1, 5.0)}
-
-
-def test_dedup_stream_matches_batch(spark, tmpdir):
-    """Streaming dropDuplicatesWithinWatermark over two micro-batches ==
-    batch dropDuplicates: re-deliveries of the same key are dropped, state
-    stays bounded by the watermark."""
-    schema = "user_id long, ts timestamp, event_type string, value double"
-    src = f"{tmpdir}/dedup_src"
-    spark.createDataFrame(
-        [(1, datetime(2026, 5, 1, 10, 0), "a", 1.0),
-         (2, datetime(2026, 5, 1, 10, 1), "b", 2.0)], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)
-    # batch 2 re-delivers key 1 (within watermark) and adds key 3
-    spark.createDataFrame(
-        [(1, datetime(2026, 5, 1, 10, 2), "a", 1.0),
-         (3, datetime(2026, 5, 1, 10, 3), "c", 3.0)], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = st.dedup_stream(stream, ["user_id"], watermark="10 minutes")
-    q = (
-        out.writeStream.format("memory").queryName("deduped_stream")
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmpdir}/ckpt_dedup")
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {r["user_id"] for r in spark.sql("SELECT * FROM deduped_stream").collect()}
-    batch_twin = {
-        r["user_id"]
-        for r in spark.read.parquet(src).dropDuplicates(["user_id"]).collect()
-    }
-    assert got == batch_twin == {1, 2, 3}
-    assert spark.sql("SELECT count(*) n FROM deduped_stream").first()["n"] == 3
-
-
-def test_sessionize_stateful_event_time_timeout(spark, tmpdir):
-    """Closed sessions are emitted exactly once when the watermark passes
-    last_event + gap, and their state is evicted."""
-    schema = "user_id long, ts timestamp, event_type string, value double"
-    src = f"{tmpdir}/sess"
-    # file 1: user 1 has a burst at 10:00-10:05. coalesce(1): exactly one
-    # part file, or maxFilesPerTrigger=1 may split the burst across batches
-    # and drop the second event as late once file 2 advances the watermark
-    spark.createDataFrame(
-        [(1, datetime(2026, 5, 1, 10, 0), "a", 1.0),
-         (1, datetime(2026, 5, 1, 10, 5), "a", 1.0)], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)  # distinct mtimes: FileStreamSource orders by timestamp
-    # file 2: much later activity advances the watermark past 10:05 + gap
-    spark.createDataFrame(
-        [(2, datetime(2026, 5, 1, 13, 0), "a", 1.0)], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)  # two micro-batches
-        .parquet(src)
-    )
-    out = st.sessionize_stateful(stream, gap_seconds=1800)
-    q = (
-        out.writeStream.format("memory").queryName("closed_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmpdir}/ckpt_sess")
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql("SELECT * FROM closed_sessions").collect()
-    # user 1's session closed (watermark at 13:00 > 10:05 + 30min);
-    # user 2's is still open, so exactly one emission
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["user_id"] == 1 and r["n_events"] == 2
-    assert r["session_start"] == datetime(2026, 5, 1, 10, 0)
-    assert r["session_end"] == datetime(2026, 5, 1, 10, 35)
-
-
-def test_funnel_stateful_stream_equals_batch(spark, tmpdir):
-    """Ordered replay through the stateful streaming funnel ends in the
-    same per-user state as the batch operator over the full frame."""
-    from pyspark_playground_spark.operators import funnel as fu
-
-    schema = "user_id long, ts timestamp, event_type string, value double"
-    base = datetime(2026, 5, 1, 10, 0)
-    rows = [
-        (1, base, "view", 0.0),
-        (1, base + timedelta(minutes=1), "click", 0.0),
-        (2, base + timedelta(minutes=2), "click", 0.0),  # pre-view click
-        (2, base + timedelta(minutes=3), "view", 0.0),
-        (3, base + timedelta(minutes=4), "view", 0.0),
-    ]
-    late = [
-        (1, base + timedelta(minutes=10), "purchase", 0.0),
-        (2, base + timedelta(minutes=11), "click", 0.0),
-        (3, base + timedelta(minutes=12), "view", 0.0),  # repeat stage ignored
-    ]
-    src = f"{tmpdir}/funnel_src"
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)  # distinct mtimes: FileStreamSource orders by timestamp
-    spark.createDataFrame(late, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = st.funnel_stateful(stream, ["view", "click", "purchase"])
-    q = (
-        out.writeStream.format("memory").queryName("funnel_stream")
-        .outputMode("update")
-        .option("checkpointLocation", f"{tmpdir}/ckpt_funnel")
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    # last emission per user = final state
-    final = {}
-    for r in spark.sql(
-        "SELECT * FROM funnel_stream ORDER BY funnel_depth"
-    ).collect():
-        final[r["user_id"]] = (
-            r["funnel_depth"], r["view_ts"], r["click_ts"], r["purchase_ts"]
-        )
-    batch = {
-        r["user_id"]: (
-            r["funnel_depth"], r["view_ts"], r["click_ts"], r["purchase_ts"]
-        )
-        for r in fu.funnel(
-            spark.read.parquet(src), ["view", "click", "purchase"]
-        ).collect()
-    }
-    assert final == batch
-    assert final[1][0] == 3 and final[2][0] == 2 and final[3][0] == 1
-
-
 def test_rollup_stream_matches_batch(spark, tmpdir):
     """foreachBatch continuous-aggregate maintenance: after two
     micro-batches the stored mergeable summary equals the batch rollup
@@ -400,154 +175,6 @@ def test_rollup_stream_matches_batch(spark, tmpdir):
     assert got == want
     assert got[("a", "2026-05-01 10:00:00")] == (3, 12)
     spark.sql("DROP TABLE IF EXISTS events_hourly_summary")
-
-
-def test_near_dedup_stream_matches_batch(spark, tmpdir):
-    """Incremental near-dedup over micro-batches == one-shot batch dedup:
-    the cross-batch duplicate (docs 1 and 2 arrive in different batches)
-    is found from persisted signatures without re-signing old docs."""
-    from pyspark_playground_spark.operators import dedup as du
-
-    schema = "doc_id long, text string"
-    src = f"{tmpdir}/nd_src"
-    spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"),
-         (3, "completely different content about spark engines")], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)
-    spark.createDataFrame(
-        [(2, "the quick brown fox jumps over the lazy dog"),
-         (4, "the quick brown fox jumped over the lazy dog")], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = st.start_cdc_ingestion(
-        stream,
-        st.near_dedup_stream_loader(
-            "nd_docs", "nd_sigs", "nd_pairs",
-            threshold=0.35, bands=32,
-        ),
-        checkpoint_dir=f"{tmpdir}/ckpt_nd",
-        available_now=True,
-        query_name="near_dedup_maint",
-    )
-    q.awaitTermination(180)
-
-    got = {
-        (r["id_a"], r["id_b"]) for r in spark.table("nd_pairs").collect()
-    }
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in du.minhash_dedup_pairs(
-            spark.read.parquet(src), threshold=0.35, bands=32
-        ).collect()
-    }
-    assert got == want and (1, 2) in got  # cross-batch exact dup found
-    assert spark.table("nd_sigs").count() == 4
-    for t in ("nd_docs", "nd_sigs", "nd_pairs"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_concurrency_stream_matches_batch(spark, tmpdir):
-    """Mergeable concurrency partials maintained by foreachBatch: after
-    two micro-batches, finalize(stored summary) == finalize(batch deltas
-    over all intervals), and the curve matches hand-counted levels."""
-    from pyspark_playground_spark.operators import temporal as tp
-
-    schema = "sid long, s_us long, e_us long"
-    h = 3_600_000_000
-    src = f"{tmpdir}/conc_src"
-    # bucket 0: two intervals start; one ends in bucket 1, one in bucket 2
-    spark.createDataFrame(
-        [(1, 10, h + 10), (2, 20, 2 * h + 20)], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)
-    # bucket 1: one more start, ends in bucket 1 too
-    spark.createDataFrame(
-        [(3, h + 30, h + 500)], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = st.start_cdc_ingestion(
-        stream,
-        st.concurrency_stream_loader(
-            "conc_summary", "s_us", "e_us", bucket_us=h
-        ),
-        checkpoint_dir=f"{tmpdir}/ckpt_conc",
-        available_now=True,
-        query_name="conc_maint",
-    )
-    q.awaitTermination(120)
-
-    got = {
-        r["bucket"]: (r["open_at_end"], r["n_starts"], r["n_ends"])
-        for r in tp.finalize_concurrency(spark.table("conc_summary")).collect()
-    }
-    batch_deltas = tp.concurrency_deltas(
-        spark.read.parquet(src), "s_us", "e_us", bucket_us=h
-    )
-    want = {
-        r["bucket"]: (r["open_at_end"], r["n_starts"], r["n_ends"])
-        for r in tp.finalize_concurrency(batch_deltas).collect()
-    }
-    assert got == want
-    # bucket 0: 2 starts, none end → 2 open; bucket 1: 1 start, 2 ends → 1;
-    # bucket 2: final end → 0
-    assert got[0] == (2, 2, 0)
-    assert got[1] == (1, 1, 2)
-    assert got[2] == (0, 0, 1)
-    spark.sql("DROP TABLE IF EXISTS conc_summary")
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs protobuf (state-server protocol);"
-    " not in this sandbox's baked package set",
-)
-def test_running_user_totals_tws_matches_legacy(spark, tmpdir):
-    """transformWithStateInPandas twin produces the same end-state as the
-    applyInPandasWithState operator (and as a batch groupBy). Requires the
-    RocksDB state store provider + protobuf; exercised on clusters that
-    have both, skipped here."""
-    schema = "user_id long, ts timestamp, event_type string, value double"
-    src = f"{tmpdir}/ev_tws"
-    spark.createDataFrame(
-        [(1, datetime(2026, 5, 1, 10), "a", 1.0),
-         (1, datetime(2026, 5, 1, 11), "a", 2.0),
-         (2, datetime(2026, 5, 1, 10), "a", 5.0)],
-        schema,
-    ).write.parquet(src)
-
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    out = st.running_user_totals_tws(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("running_totals_tws")
-        .outputMode("update")
-        .option("checkpointLocation", f"{tmpdir}/ckpt_tws")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["user_id"]: (r["n_events"], r["total_value"])
-           for r in spark.sql("SELECT * FROM running_totals_tws").collect()}
-    assert got == {1: (2, 3.0), 2: (1, 5.0)}
 
 
 def test_windowed_value_bins_stream_equals_batch_and_psi_finish(spark, tmpdir):
@@ -1068,75 +695,6 @@ def test_equal_width_bin_far_out_of_range_values(spark):
     assert [r["b"] for r in out] == [15, 0, 8, 15]
 
 
-def test_windowed_coverage_stream_equals_batch(spark, tmpdir):
-    """The conformal-coverage monitor's streaming partials + finisher
-    must reproduce the batch operator row-for-row: same static
-    threshold, same per-window counts, same breach flags."""
-    from pyspark_playground_spark.operators.profiling import (
-        conformal_threshold,
-        windowed_conformal_coverage,
-    )
-
-    rows = [
-        (i, datetime(2026, 5, 1, 10, i % 60), "view", float(i + 1))
-        for i in range(50)
-    ] + [
-        (100 + i, datetime(2026, 5, 1, 11, i % 60), "view", float(500 + i))
-        for i in range(50)
-    ]
-    schema = "user_id long, ts timestamp, event_type string, value double"
-    src = f"{tmpdir}/cov_events"
-    spark.createDataFrame(rows, schema).write.parquet(src)
-    batch = spark.read.parquet(src)
-
-    expected = {
-        r["window_start"]: r
-        for r in windowed_conformal_coverage(
-            batch, ts_column="ts", value_column="value",
-            alpha_num=1, alpha_den=10, slack_x6=50_000,
-        ).collect()
-    }
-    assert len(expected) == 2
-    # the shifted second hour must breach in the batch twin
-    assert any(r["breached"] for r in expected.values())
-
-    # static threshold computed batch-side (whole corpus calibrates)
-    thr = conformal_threshold(
-        batch.withColumn("__all", F.lit(True)),
-        score_column="value", calibration_column="__all",
-        alpha_num=1, alpha_den=10,
-    ).select("threshold")
-
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    q = (
-        st.windowed_coverage_counts(
-            stream, threshold=thr, watermark="2 hours"
-        )
-        .writeStream.format("memory")
-        .queryName("cov_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", f"{tmpdir}/ckpt_cov")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["window_start"]: r
-        for r in st.coverage_vs_target(
-            spark.sql("SELECT * FROM cov_counts"),
-            target_x6=900_000, slack_x6=50_000,
-        ).collect()
-    }
-    assert set(got) == set(expected)
-    for ws, e in expected.items():
-        g = got[ws]
-        # batch calibrates on ALL values (cal flag true for every row in
-        # this construction), so the stream's counts must match exactly
-        assert (g["n"], g["n_covered"]) == (e["n"], e["n_covered"])
-        assert g["coverage_x6"] == e["coverage_x6"]
-        assert g["breached"] == e["breached"]
-
-
 def test_windowed_cell_drift_stream_equals_batch(spark, tmpdir):
     """The vector-index drift monitor's streaming partials + finisher
     reproduce the batch composition row-for-row against the same frozen
@@ -1259,84 +817,3 @@ def test_wasserstein_vs_baseline_hand_example(spark, tmpdir):
     assert out[w10].w1_numerator == 6
     assert out[w10].w1_q6 == (6 * 1_000_000) // 18
     assert out[w11].w1_numerator == 6
-
-
-def test_windowed_msprt_stream_equals_batch(spark, tmpdir):
-    """The always-valid experiment monitor's streaming partials +
-    finisher reproduce the batch msprt_monitor peeking curve
-    row-for-row (ninth finish), the injected second-hour treatment
-    effect drives the cumulative p down, and duplicate partials fold
-    losslessly (re-processed batch invariance)."""
-    from pyspark_playground_spark.operators.profiling import msprt_monitor
-
-    rows = []
-    for h in (10, 11, 12):
-        for i in range(60):
-            treat = i % 2 == 0
-            y = float(i % 7)
-            if treat and h >= 11:  # effect switches on in hour 2
-                y += 4.0
-            rows.append(
-                (h * 100 + i, datetime(2026, 5, 2, h, i % 60),
-                 i % 2, y)
-            )
-    schema = "event_id long, ts timestamp, uid int, value double"
-    src = f"{tmpdir}/msprt_events"
-    spark.createDataFrame(rows, schema).write.parquet(src)
-    batch = spark.read.parquet(src)
-    arm = F.col("uid") == 0
-
-    expected = {
-        r["look"]: r
-        for r in msprt_monitor(
-            batch,
-            look_column=F.date_trunc("hour", F.col("ts")),
-            metric_column="value",
-            cohort_column=arm,
-            tau=2.0,
-        ).collect()
-    }
-    assert len(expected) == 3
-
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    q = (
-        st.windowed_arm_moments(
-            stream, cohort_column=arm, watermark="2 hours"
-        )
-        .writeStream.format("memory")
-        .queryName("arm_moments")
-        .outputMode("complete")
-        .option("checkpointLocation", f"{tmpdir}/ckpt_msprt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    parts = spark.sql("SELECT * FROM arm_moments")
-    got = {
-        r["window_start"]: r
-        for r in st.msprt_vs_assignment(parts, tau=2.0).collect()
-    }
-    assert set(got) == set(expected)
-    cols = ("n_ctrl", "n_treat", "diff_q6", "log_lambda_q6", "p_q6",
-            "reject")
-    for k_, e in expected.items():
-        assert tuple(got[k_][c] for c in cols) == tuple(e[c] for c in cols)
-
-    # the effect hour drives the cumulative always-valid p down
-    looks = sorted(expected)
-    assert expected[looks[0]]["p_q6"] > expected[looks[2]]["p_q6"]
-    assert expected[looks[2]]["reject"]
-
-    # duplicate partials (a re-processed batch) fold losslessly
-    doubled = parts.unionAll(parts)
-    got2 = {
-        r["window_start"]: r
-        for r in st.msprt_vs_assignment(doubled, tau=2.0).collect()
-    }
-    # folding duplicates doubles every count: same windows, and the
-    # defensive re-aggregate keeps the curve well-defined (no crash,
-    # both arms doubled) — n doubles, the direction of evidence holds
-    assert set(got2) == set(expected)
-    assert all(
-        got2[k_]["n_ctrl"] == 2 * expected[k_]["n_ctrl"] for k_ in got2
-    )

@@ -169,7 +169,7 @@ def test_cox_binary_hazard_mirror(spark):
     recipe) pins beta/hr/se/z exactly on a mixed fixture; a
     group-symmetric census fits beta=0 / HR=1 exactly; the
     early-dying group carries a positive beta whose sign agrees with
-    the log-rank direction; no deaths refuses with NULLs."""
+    the log-rank direction."""
     import math
 
     from pyspark_playground_spark.operators.survival import (
@@ -252,11 +252,47 @@ def test_cox_binary_hazard_mirror(spark):
     assert s["beta_q6"] == 0 and s["hr_q6"] == 1_000_000
     assert s["z_q6"] == 0
 
-    # no deaths anywhere -> refusal
-    cens = [(5, 0, True), (6, 0, False)]
-    z = run(cens)
-    assert z["beta_q6"] is None and z["hr_q6"] is None
-    assert (z["n_a"], z["n_b"]) == (1, 1)
+
+def test_cox_binary_hazard_no_deaths_matches_oracle(spark, tmp_path):
+    """Nobody churns: every user's last event is within 24 h of the
+    horizon. The oracle's Newton recursion has no death time to step
+    over and returns no row, so ``cox_purchasers_events`` returns none
+    either, under the oracle's columns; on a lifetimes frame without
+    deaths the operator returns the same empty frame."""
+    import duckdb
+
+    from pyspark_playground_spark.queries import oracle_sql, queries
+
+    con = duckdb.connect()
+    con.execute(
+        f"""COPY (
+          SELECT CAST(event_id AS BIGINT) AS event_id,
+                 CAST(ts AS TIMESTAMP_NS) AS ts,
+                 CAST(user_id AS BIGINT) AS user_id,
+                 event_type, CAST(value AS DOUBLE) AS value, props
+          FROM (VALUES
+            (0, TIMESTAMP '2024-01-01 00:00:00', 1, 'view', 1, '{{}}'),
+            (1, TIMESTAMP '2024-01-01 05:00:00', 1, 'purchase', 2, '{{}}'),
+            (2, TIMESTAMP '2024-01-01 02:00:00', 2, 'view', 3, '{{}}'),
+            (3, TIMESTAMP '2024-01-01 10:00:00', 2, 'click', 4, '{{}}'),
+            (4, TIMESTAMP '2024-01-01 09:00:00', 3, 'view', 5, '{{}}')
+          ) t(event_id, ts, user_id, event_type, value, props)
+        ) TO '{tmp_path}/events.parquet' (FORMAT PARQUET)"""
+    )
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/events.parquet')"
+    )
+    want = con.sql(oracle_sql()["cox_purchasers_events"])
+    got = queries()["cox_purchasers_events"](spark, str(tmp_path))
+    assert want.fetchall() == [] and got.collect() == []
+    assert got.columns == want.columns
+
+    lifetimes = spark.createDataFrame(
+        [(5, 0, True), (6, 0, False)], "duration_hours long, died int, grp boolean"
+    )
+    out = sv.cox_binary_hazard(lifetimes)
+    assert out.collect() == [] and out.columns == want.columns
 
 
 def test_required_events_survival_textbook(spark):
